@@ -1,8 +1,12 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import java.time.LocalDateTime
+import scala.collection.immutable.ArraySeq
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /**
  * Query executor — Spark replacement for the reference's execution path
@@ -12,11 +16,15 @@ import java.time.LocalDateTime
  * (`query.py:43`) and let Catalyst + whole-stage codegen run the SQL
  * distributed. The NL question path is generate → validate → execute →
  * duplicate-collapse, exactly the reference pipeline (`query.py:33-57`).
+ * A LIMIT-bounded answer runs as ONE Spark job and comes back as a local
+ * snapshot of at most `MAX_ROWS_LIMIT` rows, like the reference's
+ * `fetchdf()`; an unbounded one stays distributed (see [[collapseDuplicates]]).
  */
 object Engine {
 
-  /** Mirrors `QueryResult` (`/root/reference/app/schemas/models.py:24-26`),
-    * keeping the result distributed instead of `rows: List[Dict]`. */
+  /** Mirrors `QueryResult` (`app/schemas/models.py:24-26`):
+    * a DataFrame instead of `rows: List[Dict]` — a local relation when the
+    * result is LIMIT-bounded, a distributed plan otherwise. */
   case class QueryResult(sql: String, result: DataFrame)
 
   /**
@@ -104,18 +112,89 @@ object Engine {
   /**
    * Duplicate-row collapse, port of `query.py:49-57`: if the result contains
    * any fully-duplicated row, group by ALL columns with a `count` and sort by
-   * count descending; otherwise pass through.
+   * count descending; otherwise pass through. Pandas `groupby` drops rows with
+   * null group keys (`dropna=True` default); we replicate by dropping rows
+   * with a null (or, as `na.drop` does, NaN) key in the collapse branch only.
    *
-   * Scale notes: the pandas original does `duplicated().any()` plus a
-   * groupby; here one hash aggregation computes the groups and a cheap
-   * `filter(count>1).limit(1)` probe on it decides the branch — two jobs over
-   * one shuffle, no driver materialization. Pandas `groupby` drops rows with
-   * null group keys (`dropna=True` default); we replicate by dropping
-   * fully-null-keyed rows in the collapse branch only.
+   * Scale notes: a result whose optimized plan bounds it to at most
+   * `MAX_ROWS_LIMIT` rows — every rule-generated question and every SELECT
+   * whose LIMIT the validator injected — is collected ONCE and collapsed on
+   * the driver ([[collapseOnDriver]]). The answer is then a driver-side
+   * snapshot of at most `MAX_ROWS_LIMIT` rows, as the reference's
+   * `fetchdf()` is, and the caller's `collect()` runs no further job. Any
+   * other result (an explicit LIMIT above the cap, or a "limit" that only
+   * appears in an alias and so suppressed the injection) may be as large as
+   * the input, so it keeps the distributed probe ([[collapseDistributed]]):
+   * nothing is pulled to the driver unless the caller asks for it.
    */
-  def collapseDuplicates(res: DataFrame): DataFrame = {
+  def collapseDuplicates(res: DataFrame): DataFrame =
+    if (res.columns.isEmpty) res
+    else if (boundedByLimit(res)) collapseOnDriver(res)
+    else collapseDistributed(res)
+
+  /** The driver path's precondition: the plan itself caps the row count at
+    * `MAX_ROWS_LIMIT`, and every column is of a flat type whose `groupBy`
+    * equality [[groupKey]] reproduces (nested, map, interval and collated
+    * string columns take the distributed path). */
+  private[graft] def boundedByLimit(res: DataFrame): Boolean =
+    res.queryExecution.optimizedPlan.maxRows.exists(_ <= SqlValidator.MaxRowsLimit) &&
+      res.schema.fields.forall(f => f.dataType match {
+        case s: StringType => s.collationId == StringType.collationId
+        case _: NumericType | BooleanType | BinaryType | DateType | TimestampType |
+             TimestampNTZType | NullType => true
+        case _ => false
+      })
+
+  /** A cell as `groupBy` compares it: null-safe (Scala `==`), NaN equal to
+    * NaN and -0.0 equal to 0.0 (the canonical bits of `x + 0.0`), binary by
+    * content (a bare `Array[Byte]` hashes by identity). */
+  private def groupKey(v: Any): Any = v match {
+    case d: Double => java.lang.Double.doubleToLongBits(d + 0.0)
+    case f: Float => java.lang.Float.floatToIntBits(f + 0.0f)
+    case b: Array[Byte] => ArraySeq.unsafeWrapArray(b)
+    case other => other
+  }
+
+  /** One job: collect the bounded result, then probe and collapse the rows
+    * in driver memory. The returned frame is a local relation. */
+  private[graft] def collapseOnDriver(res: DataFrame): DataFrame = {
+    val spark = res.sparkSession
+    // bounded-collect: qa-answer-snapshot (maxRows ≤ MAX_ROWS_LIMIT, see boundedByLimit)
+    val rows = res.collect()
+    val keys = rows.map(r => r.toSeq.map(groupKey))
+    if (keys.distinct.length == rows.length)
+      return spark.createDataFrame(rows.toSeq.asJava, res.schema)
+    require(!res.columns.contains("count"), "cannot insert count, already exists")
+    val counts = mutable.LinkedHashMap.empty[Seq[Any], (Row, Long)]
+    rows.iterator.zip(keys.iterator).foreach { case (r, k) =>
+      val isNa = r.toSeq.exists {
+        case null => true
+        case d: Double => d.isNaN
+        case f: Float => f.isNaN
+        case _ => false
+      }
+      if (!isNa) counts.updateWith(k) {
+        case Some((first, n)) => Some((first, n + 1))
+        case None => Some((r, 1L))
+      }
+    }
+    // groupBy emits normalized float keys (-0.0 as 0.0)
+    val collapsed = counts.values.toSeq.sortBy(-_._2).map { case (r, n) =>
+      Row.fromSeq(r.toSeq.map {
+        case d: Double => d + 0.0
+        case f: Float => f + 0.0f
+        case v => v
+      } :+ n)
+    }
+    spark.createDataFrame(collapsed.asJava,
+      res.schema.add(StructField("count", LongType, nullable = false)))
+  }
+
+  /** The unbounded path: one hash aggregation computes the groups and a
+    * `filter(count>1).limit(1)` probe on it decides the branch — two jobs
+    * over one shuffle, no driver materialization. */
+  private[graft] def collapseDistributed(res: DataFrame): DataFrame = {
     val cols = res.columns
-    if (cols.isEmpty) return res
     // Temp name so the probe never collides with a user column named `count`
     // (pandas only errors on that collision when duplicates actually exist).
     val tmpCnt = "__graft_count"

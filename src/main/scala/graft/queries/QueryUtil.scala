@@ -10,17 +10,8 @@ object QueryUtil {
   /** One scratch dir per JVM for the source round-trip queries, deleted on
     * exit — per-invocation createTempDirectory leaked a full table copy per
     * bench/verify run. */
-  lazy val scratchDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_scratch")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(): Unit
-      }
-      rm(dir.toFile)
-    }))
-    dir.toString
-  }
+  lazy val scratchDir: String =
+    org.apache.spark.sql.graft.ScratchDir.create("graft_scratch").toString
 
   /**
    * Order-independent, engine-exact sum of a double "money" column.

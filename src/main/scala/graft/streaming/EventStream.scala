@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.graft.ScratchDir
 
 /**
  * Structured Streaming over the `events` table — SURVEY.md §7.4's streaming
@@ -146,7 +147,7 @@ object EventStream {
     // normalize pass is a no-op.
     val raw = graft.sources.Tables.normalizeEventTs(
       spark.read.parquet(s"$sfDir/events.parquet"))
-    val base = java.nio.file.Files.createTempDirectory("graft_append_")
+    val base = ScratchDir.create("graft_append_")
     val watch = base.resolve("watch")
     java.nio.file.Files.createDirectories(watch)
     // One tiny driver action at setup time (harness plumbing, not the
@@ -701,7 +702,7 @@ object EventStream {
         || spark.read.schema(schema).parquet(watchAll).isEmpty,
       "need >= 2 replay slices for a restart boundary")
     val base = ckptBaseCache.computeIfAbsent(sfDir,
-      _ => java.nio.file.Files.createTempDirectory("graft_ckpt_")).toString
+      _ => ScratchDir.create("graft_ckpt_")).toString
     val watch = s"$base/watch"; val lake = s"$base/lake"; val ckpt = s"$base/ckpt"
     // The exactly-once proof needs a FRESH checkpoint+lake per invocation
     // (a stale offset log would skip every file); clear all three sides.
@@ -766,7 +767,7 @@ object EventStream {
     // of accumulating a fresh temp dir each run. The append-mode lake must
     // start empty every invocation or the landed content would double.
     val base = fbLakeBaseCache.computeIfAbsent(sfDir,
-      _ => java.nio.file.Files.createTempDirectory("graft_fb_lake_"))
+      _ => ScratchDir.create("graft_fb_lake_"))
     val lake = base.resolve("lake").toString
     val lakeFile = new java.io.File(lake)
     if (lakeFile.exists()) deleteRecursively(lakeFile)
@@ -819,7 +820,7 @@ object EventStream {
     import org.apache.spark.sql.{Dataset, Row}
     val (watch, schema) = sliceReplayDir(spark, sfDir)
     val base = cdcBaseCache.computeIfAbsent(sfDir,
-      _ => java.nio.file.Files.createTempDirectory("graft_cdc_"))
+      _ => ScratchDir.create("graft_cdc_"))
     val sides = Array(base.resolve("a").toString, base.resolve("b").toString)
     @volatile var current = -1 // no snapshot yet
     val stream = spark.readStream.schema(schema)
@@ -884,7 +885,7 @@ object EventStream {
       .agg(min(cents).as("vmin"), max(cents).as("vmax")).head()
     val (vmin, vmax) = (dom.getLong(0), dom.getLong(1))
     val base = histBaseCache.computeIfAbsent(sfDir,
-      _ => java.nio.file.Files.createTempDirectory("graft_hist_"))
+      _ => ScratchDir.create("graft_hist_"))
     val sides = Array(base.resolve("a").toString, base.resolve("b").toString)
     @volatile var current = -1 // no bins yet
     val stream = spark.readStream.schema(schema)

@@ -144,7 +144,9 @@ class WindowGuardSpec extends AnyFunSuite {
     "event-type-vocab" -> ("Analytics.scala",
       "channel vocabulary (distinct event types) — bounded domain, never rows"),
     "skipping-file-manifest" -> ("SkippingIndex.scala",
-      "file manifest paths — bounded by file count, the operator's output"))
+      "file manifest paths — bounded by file count, the operator's output"),
+    "qa-answer-snapshot" -> ("Engine.scala",
+      "LIMIT-bounded Q&A answer — optimizedPlan.maxRows ≤ MAX_ROWS_LIMIT, like the reference's fetchdf()"))
 
   private val markerRe = """bounded-collect:\s*([A-Za-z0-9-]+)""".r.unanchored
 
