@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /**
  * Benchmark main — the driver's per-round throughput artifact.
@@ -25,21 +24,20 @@ import org.apache.spark.sql.SparkSession
  * can bury the provisional line.
  */
 object Bench {
+  /** A failed run names its query and cause on stderr (stdout stays the
+    * JSON line); the caller still scores it as a failure. */
+  def reportFailure(name: String, e: Throwable): Unit =
+    System.err.println(s"[bench-fail] $name ${e.getClass.getName}: ${e.getMessage}")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // EngineConf: engine-level tuning (r12) — the codegen compiled-class
     // cache must hold the whole fleet or the warm-up pass's stated purpose
     // (pre-compiling the generated code paths) is defeated; measured
     // 12,084 Janino compilations per timed pass at the 100-entry default
     // vs 672 at the tuned size, −28% wall on the full fleet (see
     // OPTIMIZATION_r12.md "Global").
-    val spark = EngineConf.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = EngineConf.localSession("ERROR")
     def mark(msg: String): Unit =
       System.err.println(s"[bench-pass] $msg ${java.time.Instant.now()}")
     def clearBetweenPasses(): Unit = {
@@ -72,7 +70,8 @@ object Bench {
     def timeOne(name: String): Double = {
       val fn = SparkEntry.queries(name)
       val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true } catch { case _: Throwable => false }
+      val ok = try { fn(spark, sfDir).count(); true }
+        catch { case e: Throwable => reportFailure(name, e); false }
       if (ok) (System.nanoTime() - t0) / 1e9 else Double.PositiveInfinity
     }
     val budgetSec = sys.env.get("SPARK_GRAFT_MAX_QUERY_SEC").map(_.toDouble).getOrElse(8.0)

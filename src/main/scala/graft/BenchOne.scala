@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Local iteration tool: time specific queries (comma-separated in args(0))
   * for `args(1)` repetitions (default 3) at SPARK_GRAFT_SF_DIR, clearing the
@@ -14,16 +13,12 @@ object BenchOne {
     val names = args(0).split(",").toSet
     val reps = if (args.length > 1) args(1).toInt else 3
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = EngineConf.tuned(SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = EngineConf.localSession("WARN")
     val qs = SparkEntry.queries.filter { case (n, _) => names.contains(n) }
     require(qs.nonEmpty, s"no declared query matches ${args(0)}")
     // one untimed warm-up pass (JIT + parquet footer / page cache), as Bench
-    qs.foreach { case (_, fn) =>
-      try fn(spark, sfDir).count() catch { case _: Throwable => () }
+    qs.foreach { case (name, fn) =>
+      try fn(spark, sfDir).count() catch { case e: Throwable => Bench.reportFailure(name, e) }
     }
     for (r <- 1 to reps) {
       spark.catalog.clearCache()
@@ -31,7 +26,7 @@ object BenchOne {
       qs.foreach { case (name, fn) =>
         val t0 = System.nanoTime()
         val ok = try { fn(spark, sfDir).count(); true }
-          catch { case _: Throwable => false }
+          catch { case e: Throwable => Bench.reportFailure(name, e); false }
         val sec = (System.nanoTime() - t0) / 1e9
         println(f"[bench-one] run $r $name $sec%.2f s${if (ok) "" else " FAILED"}")
       }

@@ -1,12 +1,12 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
-/** Engine-level session tuning shared by every driver-contract main
-  * (Bench/Verify/BenchOne/Debug/PhaseProfile/PlanDump) so measurements and
-  * artifacts all run the same engine. Every value here is SCALE-HONEST:
-  * none encodes the local core count or data size, and each is what a
-  * production deployment of a ~700-query fleet would set (justifications
-  * in OPTIMIZATION_r12.md).
+/** Engine-level session tuning shared by every main
+  * (Bench/Verify/BenchOne/PhaseProfile/PlanDump, through [[localSession]])
+  * so measurements and artifacts all run the same engine. Every value here
+  * is SCALE-HONEST: none encodes the local core count or data size, and
+  * each is what a production deployment of a ~700-query fleet would set
+  * (justifications in OPTIMIZATION_r12.md).
   */
 object EngineConf {
   /** Round-12 measured: one bench pass compiles 12,084 generated codegen
@@ -49,4 +49,19 @@ object EngineConf {
 
   def tuned(builder: SparkSession.Builder): SparkSession.Builder =
     builder.config("spark.sql.codegen.cache.maxEntries", CodegenCacheMaxEntries)
+
+  /** The session every main runs on: `local[SPARK_GRAFT_CPUS]` (default 4)
+    * with one shuffle partition per core, a UTC session clock, no UI, and
+    * [[tuned]]. */
+  def localSession(logLevel: String): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = tuned(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false"))
+      .getOrCreate()
+    spark.sparkContext.setLogLevel(logLevel)
+    spark
+  }
 }

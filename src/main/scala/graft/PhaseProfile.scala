@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import java.util.concurrent.atomic.{AtomicLong, LongAdder}
 
@@ -24,11 +23,7 @@ import java.util.concurrent.atomic.{AtomicLong, LongAdder}
 object PhaseProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = EngineConf.tuned(SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = EngineConf.localSession("ERROR")
     val names =
       if (args.isEmpty || args(0) == "all") SparkEntry.queries.keys.toSeq.sorted
       else args(0).split(",").toSeq
@@ -64,7 +59,7 @@ object PhaseProfile {
     // untimed warm-up (JIT + page cache), as Bench
     names.foreach { n =>
       try SparkEntry.queries(n)(spark, sfDir).count()
-      catch { case _: Throwable => () }
+      catch { case e: Throwable => Bench.reportFailure(n, e) }
     }
     spark.catalog.clearCache()
     graft.queries.Extensions.clearStagingMemo()

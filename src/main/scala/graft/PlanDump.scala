@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Round-12 optimization tool: dump `.explain("formatted")` for the named
@@ -15,11 +14,7 @@ object PlanDump {
     require(args.length == 3, "usage: PlanDump <outDir> <tag> <names|all>")
     val (outDir, tag) = (args(0), args(1))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = EngineConf.tuned(SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = EngineConf.localSession("ERROR")
     val names =
       if (args(2) == "all") SparkEntry.queries.keys.toSeq.sorted
       else args(2).split(",").toSeq

@@ -62,6 +62,24 @@ object EventStream {
     try body finally spark.conf.set(key, prev)
   }
 
+  /** Runs `stream` to the end of the replay into a memory sink (under
+    * [[withStatePartitions]]) and returns the sink's rows. The frame is
+    * analyzed before the sink's temp view is dropped, so it still reads the
+    * sink, while the catalog does not gain one view per execution. */
+  private def drainToMemory(spark: SparkSession, stream: DataFrame,
+      outputMode: String, namePrefix: String): DataFrame = {
+    val qname = namePrefix + java.util.UUID.randomUUID().toString.replace("-", "")
+    withStatePartitions(spark) {
+      val query = stream.writeStream
+        .outputMode(outputMode)
+        .format("memory")
+        .queryName(qname)
+        .start()
+      try query.processAllAvailable() finally query.stop()
+    }
+    try spark.table(qname) finally spark.catalog.dropTempView(qname)
+  }
+
   def windowedCounts(spark: SparkSession, sfDir: String): DataFrame = {
     graft.sources.Tables.ensureNanosAsLong(spark)
     val path = s"$sfDir/events.parquet"
@@ -78,17 +96,7 @@ object EventStream {
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .count()
 
-    val qname = "graft_stream_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    withStatePartitions(spark) {
-      val query = agg.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(qname)
-        .start()
-      try query.processAllAvailable() finally query.stop()
-    }
-
-    spark.table(qname)
+    drainToMemory(spark, agg, "complete", "graft_stream_")
       .select(
         date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("hour"),
         col("event_type"),
@@ -215,16 +223,7 @@ object EventStream {
       .groupBy(win, col("event_type"))
       .count()
 
-    val qname = "graft_append_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    withStatePartitions(spark) {
-      val query = agg.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(qname)
-        .start()
-      try query.processAllAvailable() finally query.stop()
-    }
-    spark.table(qname)
+    drainToMemory(spark, agg, "append", "graft_append_")
   }
 
   /**
@@ -295,17 +294,7 @@ object EventStream {
       .select(col("user_id"), col("event_type"))
       .dropDuplicates("user_id", "event_type")
 
-    val qname = "graft_dedup_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    withStatePartitions(spark) {
-      val query = dedup.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(qname)
-        .start()
-      try query.processAllAvailable() finally query.stop()
-    }
-
-    spark.table(qname).orderBy("user_id", "event_type")
+    drainToMemory(spark, dedup, "append", "graft_dedup_").orderBy("user_id", "event_type")
   }
 
   /** Output row of [[purchaseMilestones]]. */
@@ -357,22 +346,14 @@ object EventStream {
       .transformWithState(new MilestoneProcessor(step),
         TimeMode.None(), OutputMode.Append(), Encoders.product[Milestone])
 
-    val qname = "graft_tws_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val provKey = "spark.sql.streaming.stateStore.providerClass"
     val prevProv = spark.conf.get(provKey)
     spark.conf.set(provKey,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      withStatePartitions(spark) {
-        val query = milestones.writeStream
-          .outputMode("append")
-          .format("memory")
-          .queryName(qname)
-          .start()
-        try query.processAllAvailable() finally query.stop()
-      }
-    } finally spark.conf.set(provKey, prevProv)
-    spark.table(qname).orderBy("user_id", "milestone")
+    val drained =
+      try drainToMemory(spark, milestones.toDF(), "append", "graft_tws_")
+      finally spark.conf.set(provKey, prevProv)
+    drained.orderBy("user_id", "milestone")
   }
 
   /**
@@ -400,16 +381,7 @@ object EventStream {
       .dropDuplicatesWithinWatermark("user_id", "event_type", "day")
       .select(col("user_id"), col("event_type"), col("day"))
 
-    val qname = "graft_wmdedup_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    withStatePartitions(spark) {
-      val query = dedup.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(qname)
-        .start()
-      try query.processAllAvailable() finally query.stop()
-    }
-    spark.table(qname).orderBy("user_id", "event_type", "day")
+    drainToMemory(spark, dedup, "append", "graft_wmdedup_").orderBy("user_id", "event_type", "day")
   }
 
   /**
@@ -433,17 +405,7 @@ object EventStream {
       .groupBy("c_mktsegment", "event_type")
       .count()
 
-    val qname = "graft_enrich_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    withStatePartitions(spark) {
-      val query = agg.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(qname)
-        .start()
-      try query.processAllAvailable() finally query.stop()
-    }
-
-    spark.table(qname)
+    drainToMemory(spark, agg, "complete", "graft_enrich_")
       .select(col("c_mktsegment"), col("event_type"), col("count").as("n"))
       .orderBy("c_mktsegment", "event_type")
   }
@@ -484,17 +446,7 @@ object EventStream {
         col("err_ts") >= col("pur_ts") &&
         col("err_ts") <= col("pur_ts") + expr("INTERVAL 1 HOUR"))
 
-    val qname = "graft_ssjoin_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    withStatePartitions(spark) {
-      val query = joined.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(qname)
-        .start()
-      try query.processAllAvailable() finally query.stop()
-    }
-
-    spark.table(qname)
+    drainToMemory(spark, joined, "append", "graft_ssjoin_")
       .select(col("err_id"), col("pur_id"), col("user_id"), col("value"))
       .orderBy("err_id", "pur_id")
   }
@@ -539,17 +491,7 @@ object EventStream {
         col("err_ts") <= col("pur_ts") + expr("INTERVAL 1 HOUR"),
       "leftOuter")
 
-    val qname = "graft_ssoj_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    withStatePartitions(spark) {
-      val query = joined.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(qname)
-        .start()
-      try query.processAllAvailable() finally query.stop()
-    }
-
-    spark.table(qname)
+    drainToMemory(spark, joined, "append", "graft_ssoj_")
       .select(col("pur_id"), col("err_id"), col("p_user").as("user_id"),
         col("value"))
       .orderBy("pur_id", "err_id")
@@ -592,17 +534,7 @@ object EventStream {
         col("err_ts") <= col("pur_ts") + expr("INTERVAL 1 HOUR"),
       "left_semi")
 
-    val qname = "graft_sssemi_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    withStatePartitions(spark) {
-      val query = joined.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(qname)
-        .start()
-      try query.processAllAvailable() finally query.stop()
-    }
-
-    spark.table(qname)
+    drainToMemory(spark, joined, "append", "graft_sssemi_")
       .select(col("pur_id"), col("p_user").as("user_id"), col("value"))
       .orderBy("pur_id")
   }
@@ -646,17 +578,7 @@ object EventStream {
         col("err_ts") <= col("pur_ts") + expr("INTERVAL 1 HOUR"),
       "fullOuter")
 
-    val qname = "graft_ssfoj_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    withStatePartitions(spark) {
-      val query = joined.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(qname)
-        .start()
-      try query.processAllAvailable() finally query.stop()
-    }
-
-    spark.table(qname)
+    drainToMemory(spark, joined, "append", "graft_ssfoj_")
       .select(col("pur_id"), col("err_id"),
         coalesce(col("p_user"), col("user_id")).as("user_id"), col("value"))
       .orderBy("pur_id", "err_id")
@@ -985,14 +907,8 @@ object EventStream {
           out.iterator
       }
 
-    val qname = "graft_sessions_append_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    withStatePartitions(spark) {
-      val query = closed.toDF("user_id", "session_start", "session_end", "n_events")
-        .writeStream.outputMode(OutputMode.Append()).format("memory").queryName(qname).start()
-      try query.processAllAvailable() finally query.stop()
-    }
-
-    spark.table(qname).orderBy("user_id", "session_start")
+    drainToMemory(spark, closed.toDF("user_id", "session_start", "session_end", "n_events"),
+      "append", "graft_sessions_append_").orderBy("user_id", "session_start")
   }
 
   /** Per-user session state carried across micro-batches. */
@@ -1037,13 +953,7 @@ object EventStream {
           (uid, nSessions, nEvents)
       }
 
-    val qname = "graft_sessions_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    withStatePartitions(spark) {
-      val query = sessions.toDF("user_id", "n_sessions", "n_events")
-        .writeStream.outputMode(OutputMode.Update()).format("memory").queryName(qname).start()
-      try query.processAllAvailable() finally query.stop()
-    }
-
-    spark.table(qname).orderBy("user_id")
+    drainToMemory(spark, sessions.toDF("user_id", "n_sessions", "n_events"),
+      "update", "graft_sessions_").orderBy("user_id")
   }
 }

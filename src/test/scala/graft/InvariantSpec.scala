@@ -756,7 +756,7 @@ class InvariantSpec extends AnyFunSuite {
     // U = #(a > b) + ties/2, so u_x2 must equal 2·#(a > b) + #(a = b); the
     // rank formulation is the scale path, the pair join is the oracle here.
     val sf = "/root/testdata/sf0.001"
-    val r = queries.Extensions.queries("x523_mann_whitney_auc")(spark, sf).collect().head
+    val r = SparkEntry.queries("x523_mann_whitney_auc")(spark, sf).collect().head
     val v = sources.Tables(spark, sf, "orders")
       .join(sources.Tables(spark, sf, "customer"), col("o_custkey") === col("c_custkey"))
       .filter(col("c_mktsegment").isin("AUTOMOBILE", "BUILDING") &&

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.queries.{ATier, BTier, Extensions}
 
 /**
  * Physical-plan assertions: the properties that decide whether a query
@@ -13,7 +12,7 @@ class PlanSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
 
   private def plan(name: String): String = {
-    val df = (ATier.queries ++ BTier.queries ++ Extensions.queries)(name)(spark, sf)
+    val df = SparkEntry.queries(name)(spark, sf)
     df.queryExecution.executedPlan.toString
   }
 

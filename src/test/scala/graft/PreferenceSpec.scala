@@ -115,7 +115,7 @@ class PreferenceSpec extends AnyFunSuite {
     // the staging's near-equal-strength pairs (adjacent items) must stay
     // undecided at sf0.001 volumes while far pairs decide — if either
     // class vanishes the query certifies nothing
-    val out = graft.queries.Extensions.queries("x620_undecided_pref_pairs")(
+    val out = SparkEntry.queries("x620_undecided_pref_pairs")(
       spark, "/root/testdata/sf0.001")
       .collect().map(_.getString(4))
     assert(out.contains("decided") && out.contains("undecided"),

@@ -129,4 +129,18 @@ class StreamingSpec extends AnyFunSuite {
         case Array(a, b) => a.getLong(2) >= b.getLong(2); case _ => true })
     }
   }
+
+  test("x75 trending: a repeat run gives the same rows and leaves no memory-sink view") {
+    // each run drains into a memory sink registered as a temp view; the
+    // drain must drop it, or a long-lived session gains a view (and keeps
+    // the sink's rows) per execution
+    def tempViews() = spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name)
+    val x75 = SparkEntry.queries("x75_streaming_trending")
+    val r1 = x75(spark, sf).collect().toSeq
+    val after1 = tempViews()
+    val r2 = x75(spark, sf).collect().toSeq
+    assert(r1.nonEmpty && r1 == r2)
+    assert(tempViews().length == after1.length, "the second run must add no temp view")
+    assert(!after1.exists(_.startsWith("graft_append_")), s"memory-sink views left: ${after1.toSeq}")
+  }
 }
