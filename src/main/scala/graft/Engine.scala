@@ -81,7 +81,8 @@ object Engine {
 
   /** Raised for the reference's HTTP-400 upload rejections
     * (`/root/reference/app/routes/upload.py:20-22`). */
-  final class UploadException(msg: String) extends IllegalArgumentException(msg)
+  final class UploadException(msg: String, cause: Throwable = null)
+      extends IllegalArgumentException(msg, cause)
 
   /**
    * Composed ingest entry point — port of `POST /upload`
@@ -98,7 +99,7 @@ object Engine {
       val df = graft.sources.CsvSource.read(spark, path)
       (df, Profiler.profile(df))
     } catch {
-      case e: Exception => throw new UploadException(s"Error reading CSV: ${e.getMessage}")
+      case e: Exception => throw new UploadException(s"Error reading CSV: ${e.getMessage}", e)
     }
   }
 

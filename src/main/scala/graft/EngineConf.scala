@@ -2,7 +2,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Engine-level session tuning shared by every main
-  * (Bench/Verify/BenchOne/PhaseProfile/PlanDump, through [[localSession]])
+  * (Bench/Verify/PlanDump, through [[localSession]])
   * so measurements and artifacts all run the same engine. Every value here
   * is SCALE-HONEST: none encodes the local core count or data size, and
   * each is what a production deployment of a ~700-query fleet would set
@@ -10,7 +10,7 @@ import org.apache.spark.sql.SparkSession
   */
 object EngineConf {
   /** Round-12 measured: one bench pass compiles 12,084 generated codegen
-    * units (PhaseProfile) against the default 100-entry compiled-class
+    * units (summed per query) against the default 100-entry compiled-class
     * cache (`spark.sql.codegen.cache.maxEntries`), so the cache evicts
     * every entry long before any query repeats and the warm-up pass's
     * stated purpose ("JIT-compiles the generated code paths", Bench
@@ -46,6 +46,12 @@ object EngineConf {
   // they remove. On a real deployment with ≥100 MB post-shuffle
   // partitions both knobs are worth re-measuring — the build-side maps
   // then amortize — but nothing here may encode that bet locally.
+
+  /** A failed query names itself and its cause on stderr, as
+    * `[<tag>] <query> <ExceptionClass>: <message>` (stdout stays the main's
+    * artifact); the caller still scores it as a failure. */
+  def reportFailure(tag: String, name: String, e: Throwable): Unit =
+    System.err.println(s"[$tag] $name ${e.getClass.getName}: ${e.getMessage}")
 
   def tuned(builder: SparkSession.Builder): SparkSession.Builder =
     builder.config("spark.sql.codegen.cache.maxEntries", CodegenCacheMaxEntries)

@@ -24,31 +24,21 @@ object BloomJoin {
 
   /**
    * `fact` rows whose `factKey` appears in `dim.dimKey` (exact), with the
-   * bloom pre-filter applied first. The bloom side must be expressed as a
-   * scalar subquery — `BloomFilterMightContain` requires a constant or
-   * scalar-subquery bloom (it is evaluated once, broadcast with the plan),
-   * so the operator goes through SQL on temp views rather than a Column
-   * (a joined bloom column would re-evaluate per comparison and fails
-   * analysis).
+   * bloom pre-filter applied first. `BloomFilterMightContain` requires a
+   * constant or scalar-subquery bloom (it is evaluated once, broadcast with
+   * the plan), so the bloom is built as a scalar subquery over `dim`
+   * (`Dataset.scalar`) and the exact check is an `IN` subquery that the
+   * optimizer rewrites to a left semi join. No view is registered, so a
+   * call leaves the session catalog as it found it.
    */
   def bloomSemiJoin(spark: SparkSession, fact: DataFrame, factKey: String,
       dim: DataFrame, dimKey: String,
       estNumItems: Long = 1000000L, numBits: Long = 8388608L): DataFrame = {
     graft.GraftExtensions.register(spark)
-    // per-call view names: fixed names would be silently replaced by a
-    // concurrent or composed second call before this plan resolves
-    val tag = java.util.UUID.randomUUID().toString.replace("-", "")
-    val factView = s"graft_bloom_fact_$tag"
-    val dimView = s"graft_bloom_dim_$tag"
-    fact.createOrReplaceTempView(factView)
-    dim.createOrReplaceTempView(dimView)
-    spark.sql(
-      s"""SELECT f.* FROM $factView f
-         |WHERE bloom_might_contain(
-         |    (SELECT bloom_filter_build(xxhash64($dimKey), ${estNumItems}L, ${numBits}L)
-         |     FROM $dimView),
-         |    xxhash64(f.$factKey))
-         |  AND f.$factKey IN (SELECT $dimKey FROM $dimView)""".stripMargin)
+    val bloom = dim.select(call_function("bloom_filter_build",
+      xxhash64(col(dimKey)), lit(estNumItems), lit(numBits))).scalar()
+    fact.where(call_function("bloom_might_contain", bloom, xxhash64(col(factKey))) &&
+      col(factKey).isin(dim.select(col(dimKey))))
   }
 
   /**

@@ -31,13 +31,12 @@ object EventStream {
    * The operator SHAPE is unchanged — state is still hash-distributed, a
    * production deployment sizes the same knob to its executor count.
    *
-   * Default 4: measured at sf0.1 over the full 8-query streaming set,
+   * Fixed at 4: measured at sf0.1 over the full 8-query streaming set,
    * 4 beats 8 (27.9 s vs 29.7 s cold; the gap is per-partition store-commit
    * overhead) and 2 loses it again (30.5 s — too little drain parallelism),
-   * so 4 is the harness sweet spot. Env-overridable for re-measurement.
+   * so 4 is the harness sweet spot.
    */
-  private val StreamStatePartitions =
-    sys.env.getOrElse("GRAFT_STREAM_STATE_PARTITIONS", "4").toInt
+  private val StreamStatePartitions = 4
 
   /** PER-BATCH CODEGEN / PLANNING — adjudicated BY-DESIGN (r13, measured):
     * each stream-stream query spends ~0.85 s in incremental planning and

@@ -78,8 +78,9 @@ class EngineSpec extends AnyFunSuite {
     val e = intercept[Engine.UploadException](Engine.load(spark, "/tmp/nope.parquet"))
     assert(e.getMessage == "Only CSV files allowed")
     // unreadable .csv → the reference's catch-all 400 "Error reading CSV: …"
-    intercept[Engine.UploadException](
+    val missing = intercept[Engine.UploadException](
       Engine.load(spark, new java.io.File(dir, "missing.csv").getAbsolutePath))
+    assert(missing.getCause != null)
   }
 
   test("collapse: existing count column + duplicates errors like pandas reset_index") {

@@ -421,6 +421,10 @@ class PipelineOpsSpec extends AnyFunSuite {
     val got = BloomJoin.bloomSemiJoin(spark, fact, "k", dim, "dk")
       .select("k").collect().map(_.getLong(0)).sorted.toSeq
     assert(got == Seq(3L, 500L, 999L))
+    // the operator registers no view, so repeated calls leave the catalog as it was
+    val leftViews = spark.catalog.listTables().collect().map(_.name)
+      .filter(_.startsWith("graft_bloom_"))
+    assert(leftViews.isEmpty, s"bloomSemiJoin left views: ${leftViews.mkString(", ")}")
   }
 
   test("distributionDivergence: hand-computed TVD, identical=0, disjoint=10^6") {
