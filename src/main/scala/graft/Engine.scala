@@ -106,7 +106,7 @@ object Engine {
   /** Register + execute one validated SELECT over the session table `df`
     * (`query.py:42-45`), then apply the duplicate collapse (`query.py:49-57`). */
   def execute(spark: SparkSession, df: DataFrame, validatedSql: String): DataFrame = {
-    df.createOrReplaceTempView("df")
+    df.createOrReplaceTempView("df") // session-mutation: the upload's `df` view (query.py:43)
     collapseDuplicates(spark.sql(toSparkSql(validatedSql)))
   }
 
@@ -231,13 +231,14 @@ object Engine {
 
   /** The AI-path contract: any externally produced SELECT, validated then
     * run. The validator keeps the reference's substring semantics for parity;
-    * deployments wanting plan-level hardening (catching side-effecting
-    * statements the blocklist misses, e.g. `CACHE TABLE … AS SELECT`) should
-    * additionally call [[graft.plans.ReadOnlyGuard.assertReadOnly]] and set
-    * `spark.graft.maxRows` for the optimizer-rule row cap
+    * [[graft.plans.ReadOnlyGuard]] then rejects, at the parsed plan, any
+    * side-effecting statement the blocklist misses (`CACHE TABLE … AS
+    * SELECT`, `SET`, `REFRESH TABLE`), so user SQL cannot change the session
+    * either. `spark.graft.maxRows` adds the optimizer-rule row cap
     * ([[graft.plans.EnforceMaxRows]]). */
   def executeSql(spark: SparkSession, df: DataFrame, sql: String): QueryResult = {
     val validated = SqlValidator.validate(sql, df.columns.toIndexedSeq)
+    graft.plans.ReadOnlyGuard.assertReadOnly(spark, toSparkSql(validated))
     QueryResult(validated, execute(spark, df, validated))
   }
 }

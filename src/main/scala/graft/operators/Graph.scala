@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.FreshSession
 
 /**
  * Graph ranking operators over edge lists. Complements
@@ -20,22 +21,19 @@ object Graph {
    * so every iteration re-exchanged (and re-sorted) the full edge frame.
    * `Dataset.localCheckpoint` records the PHYSICAL plan's partitioning and
    * ordering into its `LogicalRDD` leaf; executing the checkpoint with AQE
-   * scoped OFF (conf restored immediately — the EventStream scoped-conf
-   * discipline) makes that physical plan the plain repartition+sort, whose
-   * partitioning the leaf then carries into every AQE-planned consumer:
-   * each iteration's join exchanges only the node-bounded side. At cluster
-   * scale the same contract is a bucketed staging table (disk-persisted,
-   * bucketed+sorted by the probe key); this is the in-memory session
-   * analog. EAGER (one staging job), like the staging memos it feeds.
+   * off (in a [[FreshSession]], so the caller's conf never changes) makes
+   * that physical plan the plain repartition+sort, whose partitioning the
+   * leaf then carries into every AQE-planned consumer: each iteration's
+   * join exchanges only the node-bounded side. At cluster scale the same
+   * contract is a bucketed staging table (disk-persisted, bucketed+sorted
+   * by the probe key); this is the in-memory session analog. EAGER (one
+   * staging job), like the staging memos it feeds.
    */
-  private[graft] def partitionedCheckpoint(df: DataFrame, key: String): DataFrame = {
-    val spark = df.sparkSession
-    val k = "spark.sql.adaptive.enabled"
-    val prev = spark.conf.get(k)
-    spark.conf.set(k, "false")
-    try df.repartition(col(key)).sortWithinPartitions(key).localCheckpoint()
-    finally spark.conf.set(k, prev)
-  }
+  private[graft] def partitionedCheckpoint(df: DataFrame, key: String): DataFrame =
+    FreshSession(df.sparkSession, "spark.sql.adaptive.enabled" -> "false") { s =>
+      FreshSession.bind(s, df).repartition(col(key)).sortWithinPartitions(key)
+        .localCheckpoint()
+    }
 
   /**
    * Fixed-iteration PageRank in PURE INTEGER ARITHMETIC — every rank is a

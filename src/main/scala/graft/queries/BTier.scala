@@ -296,108 +296,70 @@ object BTier extends QueryRegistry {
 
   /** Scalar subquery — threshold computed exactly (decimal sum / count) so
     * both engines filter on the identical double. */
-  private val b18: Q = query("b18_subquery_scalar", oracle =
+  private val b18: Q = sqlQuery("b18_subquery_scalar", oracle =
       (s"""SELECT o_orderpriority, COUNT(*) AS n, ${dsumSql("o_totalprice")} AS total
          |FROM orders WHERE o_totalprice > (
          | SELECT ${dsumSql("o_totalprice")}/COUNT(*) FROM orders)
-         |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin.replace("\n", " "))) { (spark, sfDir) =>
-    Tables(spark, sfDir, "orders").createOrReplaceTempView("orders")
-    spark.sql(
-      """SELECT o_orderpriority, COUNT(*) AS n,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM orders
-        |WHERE o_totalprice > (
-        |  SELECT CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)/COUNT(*) FROM orders)
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin)
-  }
+         |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin.replace("\n", " ")))
 
   /** IN subquery (plans as a semi join). */
-  private val b19: Q = query("b19_subquery_in", oracle =
+  private val b19: Q = sqlQuery("b19_subquery_in", oracle =
       ("""SELECT o_orderstatus, COUNT(*) AS n FROM orders
          |WHERE o_custkey IN (SELECT c_custkey FROM customer WHERE c_acctbal > 9000)
-         |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin.replace("\n", " "))) { (spark, sfDir) =>
-    Tables.registerAll(spark, sfDir)
-    spark.sql(
-      """SELECT o_orderstatus, COUNT(*) AS n FROM orders
-        |WHERE o_custkey IN (SELECT c_custkey FROM customer WHERE c_acctbal > 9000)
-        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin)
-  }
+         |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin.replace("\n", " ")))
 
   /** CTE + multi-table join — same ANSI text runs on Spark and DuckDB. */
-  private val cteSql =
-    """WITH cust_orders AS (
-      |  SELECT o_custkey, COUNT(*) AS n,
-      |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-      |  FROM orders GROUP BY o_custkey)
-      |SELECT c_mktsegment, COUNT(*) AS n_cust,
-      |  CAST(SUM(CAST(total AS DECIMAL(18,2))) AS DOUBLE) AS seg_total
-      |FROM customer JOIN cust_orders ON c_custkey = o_custkey
-      |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin
-
-  private val b20: Q = query("b20_cte_multitable", oracle =
-      cteSql.replace("\n", " ")) { (spark, sfDir) =>
-    Tables.registerAll(spark, sfDir)
-    spark.sql(cteSql)
-  }
+  private val b20: Q = sqlQuery("b20_cte_multitable", oracle =
+      """WITH cust_orders AS (
+        |  SELECT o_custkey, COUNT(*) AS n,
+        |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
+        |  FROM orders GROUP BY o_custkey)
+        |SELECT c_mktsegment, COUNT(*) AS n_cust,
+        |  CAST(SUM(CAST(total AS DECIMAL(18,2))) AS DOUBLE) AS seg_total
+        |FROM customer JOIN cust_orders ON c_custkey = o_custkey
+        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin.replace("\n", " "))
 
   /** Correlated scalar subqueries (Catalyst decorrelates them into
     * aggregate + left outer join — no per-row re-execution; COUNT over the
     * empty correlation group correctly yields 0, the classic "COUNT bug"). */
-  private val b34: Q = query("b34_correlated_scalar", oracle =
+  private val b34: Q = sqlQuery("b34_correlated_scalar", oracle =
       (s"""SELECT c_custkey,
          | CAST((SELECT COUNT(*) FROM orders WHERE o_custkey = c_custkey) AS BIGINT) AS n_orders,
          | (SELECT COALESCE(${dsumSql("o_totalprice")}, 0.0)
          |  FROM orders WHERE o_custkey = c_custkey) AS spend
-         |FROM customer ORDER BY c_custkey""".stripMargin.replace("\n", " "))) { (spark, sfDir) =>
-    Tables.registerAll(spark, sfDir)
-    spark.sql(
+         |FROM customer ORDER BY c_custkey""".stripMargin.replace("\n", " ")),
+    sparkSql =
       """SELECT c_custkey,
         |  (SELECT COUNT(*) FROM orders WHERE o_custkey = c_custkey) AS n_orders,
         |  (SELECT COALESCE(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE), 0.0)
         |   FROM orders WHERE o_custkey = c_custkey) AS spend
         |FROM customer ORDER BY c_custkey""".stripMargin)
-  }
 
   /** LATERAL correlated subquery: top order per customer — plans as a
     * window-style per-key top-1, not a per-row subquery loop. */
-  private val b35: Q = query("b35_lateral_topk", oracle =
+  private val b35: Q = sqlQuery("b35_lateral_topk", oracle =
       ("""SELECT c_custkey, t.o_orderkey, t.o_totalprice
          |FROM customer, LATERAL (
          | SELECT o_orderkey, o_totalprice FROM orders
          | WHERE o_custkey = c_custkey
          | ORDER BY o_totalprice DESC, o_orderkey LIMIT 1) t
-         |ORDER BY c_custkey""".stripMargin.replace("\n", " "))) { (spark, sfDir) =>
-    Tables.registerAll(spark, sfDir)
-    spark.sql(
-      """SELECT c_custkey, t.o_orderkey, t.o_totalprice
-        |FROM customer, LATERAL (
-        |  SELECT o_orderkey, o_totalprice FROM orders
-        |  WHERE o_custkey = c_custkey
-        |  ORDER BY o_totalprice DESC, o_orderkey LIMIT 1) t
-        |ORDER BY c_custkey""".stripMargin)
-  }
+         |ORDER BY c_custkey""".stripMargin.replace("\n", " ")))
 
   /** Recursive CTE (Spark 4 surface): a generated 1995–1996 month spine
     * LEFT-joined to orders — the calendar-spine analytics pattern, with
     * empty months surviving as zero rows. Identical ANSI text runs in
     * DuckDB; `make_date` keys both sides (Spark's DATE_TRUNC returns
     * TIMESTAMP while DuckDB's returns DATE, so it can't be the join key). */
-  private val recursiveSql: String =
-    """WITH RECURSIVE n(i) AS (
-      |  SELECT 0 UNION ALL SELECT i + 1 FROM n WHERE i < 23),
-      |months AS (
-      |  SELECT make_date(1995 + CAST(FLOOR(i / 12) AS INT), 1 + i % 12, 1) AS month FROM n)
-      |SELECT month, COUNT(o_orderkey) AS n_orders,
-      |  COALESCE(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE), 0.0) AS spend
-      |FROM months LEFT JOIN orders
-      |  ON make_date(CAST(YEAR(o_orderdate) AS INT), CAST(MONTH(o_orderdate) AS INT), 1) = month
-      |GROUP BY month ORDER BY month""".stripMargin
-
-  private val b36: Q = query("b36_recursive_cte", oracle =
-      recursiveSql.replace("\n", " ")) { (spark, sfDir) =>
-    Tables.registerAll(spark, sfDir)
-    spark.sql(recursiveSql)
-  }
+  private val b36: Q = sqlQuery("b36_recursive_cte", oracle =
+      """WITH RECURSIVE n(i) AS (
+        |  SELECT 0 UNION ALL SELECT i + 1 FROM n WHERE i < 23),
+        |months AS (
+        |  SELECT make_date(1995 + CAST(FLOOR(i / 12) AS INT), 1 + i % 12, 1) AS month FROM n)
+        |SELECT month, COUNT(o_orderkey) AS n_orders,
+        |  COALESCE(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE), 0.0) AS spend
+        |FROM months LEFT JOIN orders
+        |  ON make_date(CAST(YEAR(o_orderdate) AS INT), CAST(MONTH(o_orderdate) AS INT), 1) = month
+        |GROUP BY month ORDER BY month""".stripMargin.replace("\n", " "))
 
   /** ORC source/sink round-trip (columnar format beyond parquet/CSV/JSON):
     * parquet → ORC write → ORC scan → aggregate. ORC round-trips the exact
@@ -589,19 +551,11 @@ object BTier extends QueryRegistry {
   }
 
   /** GROUPING SETS (via SQL — the general grouping-set surface). */
-  private val b26: Q = query("b26_grouping_sets", oracle =
+  private val b26: Q = sqlQuery("b26_grouping_sets", oracle =
       ("""SELECT COALESCE(l_returnflag, 'ALL') AS flag, COALESCE(l_linestatus, 'ALL') AS status,
          | COUNT(*) AS n
          |FROM lineitem GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-         |ORDER BY flag, status""".stripMargin.replace("\n", " "))) { (spark, sfDir) =>
-    Tables(spark, sfDir, "lineitem").createOrReplaceTempView("lineitem")
-    spark.sql(
-      """SELECT COALESCE(l_returnflag, 'ALL') AS flag, COALESCE(l_linestatus, 'ALL') AS status,
-        | COUNT(*) AS n
-        |FROM lineitem
-        |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-        |ORDER BY flag, status""".stripMargin)
-  }
+         |ORDER BY flag, status""".stripMargin.replace("\n", " ")))
 
   /** UNION (distinct) — vs the UNION ALL in b11. */
   private val b27: Q = query("b27_union_distinct", oracle =
@@ -833,95 +787,60 @@ object BTier extends QueryRegistry {
 
   /** Aggregate FILTER clause (per-aggregate predicates without CASE
     * scaffolding) — ANSI surface shared by Spark and DuckDB. */
-  private val b47: Q = query("b47_agg_filter_clause", oracle =
+  private val b47: Q = sqlQuery("b47_agg_filter_clause", oracle =
       ("""SELECT o_orderpriority, COUNT(*) AS n,
          | COUNT(*) FILTER (WHERE o_orderstatus = 'F') AS n_filled,
          | CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2)))
          |   FILTER (WHERE o_totalprice > 100000) AS DOUBLE) AS big_total
          |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority"""
-        .stripMargin.replace("\n", " "))) { (spark, sfDir) =>
-    Tables.registerAll(spark, sfDir)
-    spark.sql(
-      """SELECT o_orderpriority, COUNT(*) AS n,
-        | COUNT(*) FILTER (WHERE o_orderstatus = 'F') AS n_filled,
-        | CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2)))
-        |   FILTER (WHERE o_totalprice > 100000) AS DOUBLE) AS big_total
-        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin)
-  }
+        .stripMargin.replace("\n", " ")))
 
   /** GROUPING() disambiguation over ROLLUP (vs b09, where a NULL group key
     * is indistinguishable from a NULL data value): the grouping flags tag
     * subtotal rows explicitly — the ANSI mechanism BI tools rely on. */
-  private val b48: Q = query("b48_grouping_function", oracle =
+  private val b48: Q = sqlQuery("b48_grouping_function", oracle =
       ("""SELECT o_orderstatus, o_orderpriority,
          | CAST(GROUPING(o_orderstatus) AS INT) AS g_status,
          | CAST(GROUPING(o_orderpriority) AS INT) AS g_prio,
          | COUNT(*) AS n
          |FROM orders GROUP BY ROLLUP(o_orderstatus, o_orderpriority)
          |ORDER BY g_status, g_prio, o_orderstatus, o_orderpriority"""
-        .stripMargin.replace("\n", " "))) { (spark, sfDir) =>
-    Tables.registerAll(spark, sfDir)
-    spark.sql(
-      """SELECT o_orderstatus, o_orderpriority,
-        | CAST(GROUPING(o_orderstatus) AS INT) AS g_status,
-        | CAST(GROUPING(o_orderpriority) AS INT) AS g_prio,
-        | COUNT(*) AS n
-        |FROM orders GROUP BY ROLLUP(o_orderstatus, o_orderpriority)
-        |ORDER BY g_status, g_prio, o_orderstatus, o_orderpriority""".stripMargin)
-  }
+        .stripMargin.replace("\n", " ")))
 
   /** b49 — correlated EXISTS / NOT EXISTS: both rewrite to one semi and
     * one anti hash join on the customer key (no per-row subquery
     * execution — the plan is two joins, each broadcast or shuffle as
     * stats dictate). */
-  private val b49: Q = query("b49_exists_not_exists", oracle =
+  private val b49: Q = sqlQuery("b49_exists_not_exists", oracle =
       ("""SELECT c_custkey, c_mktsegment FROM customer c
          |WHERE EXISTS (SELECT 1 FROM orders o
          |  WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 300000)
          |  AND NOT EXISTS (SELECT 1 FROM orders o2
          |  WHERE o2.o_custkey = c.c_custkey AND o2.o_orderstatus = 'F'
          |    AND o2.o_totalprice < 10000)
-         |ORDER BY c_custkey""".stripMargin.replace("\n", " "))) { (spark, sfDir) =>
-    Tables.registerAll(spark, sfDir)
-    spark.sql(
-      """SELECT c_custkey, c_mktsegment FROM customer c
-        |WHERE EXISTS (SELECT 1 FROM orders o
-        |  WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 300000)
-        |  AND NOT EXISTS (SELECT 1 FROM orders o2
-        |  WHERE o2.o_custkey = c.c_custkey AND o2.o_orderstatus = 'F'
-        |    AND o2.o_totalprice < 10000)
-        |ORDER BY c_custkey""".stripMargin)
-  }
+         |ORDER BY c_custkey""".stripMargin.replace("\n", " ")))
 
   /** b50 — positional explode (LATERAL VIEW posexplode): token + 0-based
     * position, the ordinality-preserving flatten (map-side, no shuffle). */
-  private val b50: Q = query("b50_posexplode_ordinal", oracle =
+  private val b50: Q = sqlQuery("b50_posexplode_ordinal", oracle =
       ("""WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws
          |  FROM documents WHERE doc_id < 5),
          |ix AS (SELECT doc_id, ws, unnest(range(len(ws))) AS i FROM w)
          |SELECT doc_id, CAST(i AS INT) AS pos, ws[i+1] AS word FROM ix
-         |ORDER BY doc_id, pos""".stripMargin.replace("\n", " "))) { (spark, sfDir) =>
-    Tables.registerAll(spark, sfDir)
-    spark.sql(
+         |ORDER BY doc_id, pos""".stripMargin.replace("\n", " ")),
+    sparkSql =
       """SELECT doc_id, pos, word FROM documents
         |LATERAL VIEW posexplode(split(text, ' ')) t AS pos, word
         |WHERE doc_id < 5 ORDER BY doc_id, pos""".stripMargin)
-  }
 
   /** b51 — GROUP BY ALL / ORDER BY ALL: the modern analyst shorthand
     * (every non-aggregate select item groups; every output column orders)
     * — same plan as the explicit form. */
-  private val b51: Q = query("b51_group_by_all", oracle =
+  private val b51: Q = sqlQuery("b51_group_by_all", oracle =
       ("""SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
          | CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS qty
          |FROM lineitem GROUP BY ALL ORDER BY ALL"""
-        .stripMargin.replace("\n", " "))) { (spark, sfDir) =>
-    Tables.registerAll(spark, sfDir)
-    spark.sql(
-      """SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
-        | CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS qty
-        |FROM lineitem GROUP BY ALL ORDER BY ALL""".stripMargin)
-  }
+        .stripMargin.replace("\n", " ")))
 
   /** b52 — SLIDING time windows (2-day window, 1-day slide): each event
     * lands in exactly window/slide = 2 overlapping windows — the rolling
@@ -950,30 +869,28 @@ object BTier extends QueryRegistry {
     * yields NULL instead of a job-killing cast error — COUNT/SUM of the
     * parses give the ingest health report. At 100 TB one malformed row
     * must never fail the batch. */
-  private val b53: Q = query("b53_try_cast_parse", oracle =
+  private val b53: Q = sqlQuery("b53_try_cast_parse", oracle =
       ("""SELECT lang, COUNT(*) AS n_total,
          | COUNT(TRY_CAST(CASE WHEN doc_id % 3 = 0 THEN CAST(n_chars AS VARCHAR)
          |   ELSE lang END AS INTEGER)) AS n_parsed,
          | CAST(SUM(TRY_CAST(CASE WHEN doc_id % 3 = 0 THEN CAST(n_chars AS VARCHAR)
          |   ELSE lang END AS INTEGER)) AS BIGINT) AS sum_parsed
          |FROM documents GROUP BY lang ORDER BY lang"""
-        .stripMargin.replace("\n", " "))) { (spark, sfDir) =>
-    Tables.registerAll(spark, sfDir)
-    spark.sql(
+        .stripMargin.replace("\n", " ")),
+    sparkSql =
       """SELECT lang, COUNT(*) AS n_total,
         | COUNT(try_cast(CASE WHEN doc_id % 3 = 0 THEN CAST(n_chars AS STRING)
         |   ELSE lang END AS INT)) AS n_parsed,
         | SUM(try_cast(CASE WHEN doc_id % 3 = 0 THEN CAST(n_chars AS STRING)
         |   ELSE lang END AS INT)) AS sum_parsed
         |FROM documents GROUP BY lang ORDER BY lang""".stripMargin)
-  }
 
   /** b54 — IGNORE NULLS window navigation: carried-forward and whole-frame
     * first/last over a sparse column (purchase value among non-purchase
     * events) — the SQL surface behind forward-fill and "value as of";
     * running last counts the pre-first-purchase prefix, whole-frame
     * first/last pin both ends. Decimal cents keep it engine-exact. */
-  private val b54: Q = query("b54_ignore_nulls_window", oracle =
+  private val b54: Q = sqlQuery("b54_ignore_nulls_window", oracle =
       ("""WITH o AS (SELECT user_id, ts, event_id,
          |  CASE WHEN event_type = 'purchase'
          |   THEN CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) END AS pc
@@ -993,9 +910,8 @@ object BTier extends QueryRegistry {
          |  AS n_before_first,
          | MIN(first_p) AS first_purchase_cents, MIN(last_p) AS last_purchase_cents
          |FROM w GROUP BY user_id ORDER BY user_id"""
-        .stripMargin.replace("\n", " "))) { (spark, sfDir) =>
-    Tables.registerAll(spark, sfDir)
-    spark.sql(
+        .stripMargin.replace("\n", " ")),
+    sparkSql =
       """WITH o AS (SELECT user_id, ts, event_id,
         |  CASE WHEN event_type = 'purchase'
         |   THEN CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) END AS pc
@@ -1015,14 +931,13 @@ object BTier extends QueryRegistry {
         |  AS n_before_first,
         | MIN(first_p) AS first_purchase_cents, MIN(last_p) AS last_purchase_cents
         |FROM w GROUP BY user_id ORDER BY user_id""".stripMargin)
-  }
 
   /** b55 — ranking-function zoo: NTILE / PERCENT_RANK / CUME_DIST over the
     * same deterministic (partition, order) — the SQL surface behind
     * quantile bucketing (curriculum deciles, equal-size shards). The two
     * float functions are single divisions of small integers, so they are
     * bit-identical across engines (no summation order involved). */
-  private val b55: Q = query("b55_ranking_zoo", oracle =
+  private val b55: Q = sqlQuery("b55_ranking_zoo", oracle =
       ("""SELECT l_returnflag, l_orderkey, l_linenumber,
          | NTILE(4) OVER w AS quartile,
          | PERCENT_RANK() OVER w AS pct_rank,
@@ -1031,25 +946,14 @@ object BTier extends QueryRegistry {
          |WINDOW w AS (PARTITION BY l_returnflag
          |  ORDER BY l_quantity, l_orderkey, l_linenumber)
          |ORDER BY l_returnflag, l_orderkey, l_linenumber"""
-        .stripMargin.replace("\n", " "))) { (spark, sfDir) =>
-    Tables.registerAll(spark, sfDir)
-    spark.sql(
-      """SELECT l_returnflag, l_orderkey, l_linenumber,
-        | NTILE(4) OVER w AS quartile,
-        | PERCENT_RANK() OVER w AS pct_rank,
-        | CUME_DIST() OVER w AS cume
-        |FROM lineitem
-        |WINDOW w AS (PARTITION BY l_returnflag
-        |  ORDER BY l_quantity, l_orderkey, l_linenumber)
-        |ORDER BY l_returnflag, l_orderkey, l_linenumber""".stripMargin)
-  }
+        .stripMargin.replace("\n", " ")))
 
   /** b56 — VARIANT ingestion (Spark 4 semi-structured type): JSON props
     * parsed ONCE into a Variant column, then typed `variant_get` paths —
     * the shred-at-read pattern replacing per-access string re-parsing
     * (b21's get_json_object re-parses the string per extraction; a Variant
     * parses once and serves every path from its binary encoding). */
-  private val b56: Q = query("b56_variant_json", oracle =
+  private val b56: Q = sqlQuery("b56_variant_json", oracle =
       ("""WITH t AS (SELECT event_type,
          |  CAST(REGEXP_EXTRACT(props, '"k":\s*(-?\d+)', 1) AS INT) AS k
          | FROM events)
@@ -1057,16 +961,14 @@ object BTier extends QueryRegistry {
          | MAX(k) AS max_k,
          | CAST(SUM(CASE WHEN k >= 50 THEN 1 ELSE 0 END) AS BIGINT) AS n_high
          |FROM t GROUP BY event_type ORDER BY event_type"""
-        .stripMargin.replace("\n", " "))) { (spark, sfDir) =>
-    Tables.registerAll(spark, sfDir)
-    spark.sql(
+        .stripMargin.replace("\n", " ")),
+    sparkSql =
       """WITH v AS (SELECT event_type, parse_json(props) AS pv FROM events),
         |t AS (SELECT event_type, variant_get(pv, '$.k', 'int') AS k FROM v)
         |SELECT event_type, COUNT(*) AS n, CAST(SUM(k) AS BIGINT) AS sum_k,
         | MAX(k) AS max_k,
         | CAST(SUM(CASE WHEN k >= 50 THEN 1 ELSE 0 END) AS BIGINT) AS n_high
         |FROM t GROUP BY event_type ORDER BY event_type""".stripMargin)
-  }
 
   /** b57 — RANK() group limit with TIES KEPT: top-3 suppliers per nation
     * by exact-decimal revenue where equal revenues share a rank and ALL
@@ -1075,7 +977,7 @@ object BTier extends QueryRegistry {
     * below the window exchange as a rank-mode WindowGroupLimit, so each
     * partition ships only its top rows — same pruning as b07's
     * row_number form, different (and sometimes required) semantics. */
-  private val b57: Q = query("b57_rank_ties_topk", oracle =
+  private val b57: Q = sqlQuery("b57_rank_ties_topk", oracle =
       ("""WITH rev AS (SELECT n_name, s_name,
          |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
          | FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
@@ -1085,26 +987,13 @@ object BTier extends QueryRegistry {
          |  RANK() OVER (PARTITION BY n_name ORDER BY revenue DESC) AS rk
          | FROM rev)
          |SELECT n_name, s_name, revenue, rk FROM r WHERE rk <= 3
-         |ORDER BY n_name, rk, s_name""".stripMargin.replace("\n", " "))) { (spark, sfDir) =>
-    Tables.registerAll(spark, sfDir)
-    spark.sql(
-      """WITH rev AS (SELECT n_name, s_name,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-        | FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-        |  JOIN nation ON s_nationkey = n_nationkey
-        | GROUP BY n_name, s_name),
-        |r AS (SELECT n_name, s_name, revenue,
-        |  RANK() OVER (PARTITION BY n_name ORDER BY revenue DESC) AS rk
-        | FROM rev)
-        |SELECT n_name, s_name, revenue, rk FROM r WHERE rk <= 3
-        |ORDER BY n_name, rk, s_name""".stripMargin)
-  }
+         |ORDER BY n_name, rk, s_name""".stripMargin.replace("\n", " ")))
 
   /** b58 — named WINDOW clause: one window definition shared by a running
     * sum, a navigation lag, and a rank — the de-duplicated-spec SQL
     * surface (repeating the OVER(...) body invites drift between the
     * copies); Spark resolves all three against the single `w`. */
-  private val b58: Q = query("b58_named_window_clause", oracle =
+  private val b58: Q = sqlQuery("b58_named_window_clause", oracle =
       ("""SELECT l_orderkey, l_linenumber,
          | CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) OVER w AS DOUBLE)
          |  AS running_qty,
@@ -1113,19 +1002,7 @@ object BTier extends QueryRegistry {
          | CAST(ROW_NUMBER() OVER w AS BIGINT) AS line_seq
          |FROM lineitem WHERE l_orderkey % 997 = 0
          |WINDOW w AS (PARTITION BY l_orderkey ORDER BY l_linenumber)
-         |ORDER BY l_orderkey, l_linenumber""".stripMargin.replace("\n", " "))) { (spark, sfDir) =>
-    Tables.registerAll(spark, sfDir)
-    spark.sql(
-      """SELECT l_orderkey, l_linenumber,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) OVER w AS DOUBLE)
-        |    AS running_qty,
-        |  CAST(LAG(CAST(l_quantity AS DECIMAL(18,2))) OVER w AS DOUBLE)
-        |    AS prev_qty,
-        |  CAST(ROW_NUMBER() OVER w AS BIGINT) AS line_seq
-        |FROM lineitem WHERE l_orderkey % 997 = 0
-        |WINDOW w AS (PARTITION BY l_orderkey ORDER BY l_linenumber)
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin)
-  }
+         |ORDER BY l_orderkey, l_linenumber""".stripMargin.replace("\n", " ")))
 
   /** b59 — union BY NAME with missing-column fill: branches with
     * differently-ORDERED select lists align by column name, and a column
@@ -1152,24 +1029,14 @@ object BTier extends QueryRegistry {
     * DEFINED EARLIER IN THE SAME LIST (Spark 3.4+ surface; DuckDB agrees)
     * — derived-metric chains without a wrapping subquery, and each step
     * of the chain stays visible in the output for auditing. */
-  private val b60: Q = query("b60_lateral_column_alias", oracle =
+  private val b60: Q = sqlQuery("b60_lateral_column_alias", oracle =
       ("""SELECT o_orderpriority,
          | CAST(COUNT(*) AS BIGINT) AS n,
          | CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total,
          | total / n AS avg_price,
          | avg_price * 2 AS double_avg
          |FROM orders GROUP BY o_orderpriority
-         |ORDER BY o_orderpriority""".stripMargin.replace("\n", " "))) { (spark, sfDir) =>
-    Tables.registerAll(spark, sfDir)
-    spark.sql(
-      """SELECT o_orderpriority,
-        |  CAST(COUNT(*) AS BIGINT) AS n,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total,
-        |  total / n AS avg_price,
-        |  avg_price * 2 AS double_avg
-        |FROM orders GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin)
-  }
+         |ORDER BY o_orderpriority""".stripMargin.replace("\n", " ")))
 
   /** b61 — null-safe equality join (`<=>` in Spark, IS NOT DISTINCT FROM
     * in the oracle): the dimension carries an explicit unknown row keyed
@@ -1178,7 +1045,7 @@ object BTier extends QueryRegistry {
     * three-valued-logic corner that loses rows in naive pipelines —
     * NULLs planted deterministically (event_id % 211, the x93 pattern)
     * so the divergence is non-vacuous at every SF. */
-  private val b61: Q = query("b61_null_safe_join", oracle =
+  private val b61: Q = sqlQuery("b61_null_safe_join", oracle =
       ("""WITH ev AS (SELECT CASE WHEN event_id % 211 = 0 THEN NULL
          |   ELSE user_id % 10 END AS k FROM events
          |  WHERE user_id IS NOT NULL),
@@ -1194,9 +1061,8 @@ object BTier extends QueryRegistry {
          |SELECT ns.seg AS seg, CAST(ns.n AS BIGINT) AS n_null_safe,
          | CAST(COALESCE(st.n, 0) AS BIGINT) AS n_strict
          |FROM ns LEFT JOIN st ON ns.seg = st.seg
-         |ORDER BY seg""".stripMargin.replace("\n", " "))) { (spark, sfDir) =>
-    Tables.registerAll(spark, sfDir)
-    spark.sql(
+         |ORDER BY seg""".stripMargin.replace("\n", " ")),
+    sparkSql =
       """WITH ev AS (SELECT CASE WHEN event_id % 211 = 0 THEN NULL
         |   ELSE user_id % 10 END AS k FROM events
         |  WHERE user_id IS NOT NULL),
@@ -1213,7 +1079,6 @@ object BTier extends QueryRegistry {
         |  CAST(COALESCE(st.n, 0) AS BIGINT) AS n_strict
         |FROM ns LEFT JOIN st ON ns.seg = st.seg
         |ORDER BY seg""".stripMargin)
-  }
 
   /** b62 — calendar month-arithmetic clamping: `add_months` lands
     * month-end dates on the SHORTER month's last day (Jan 31 + 1 →
@@ -1221,7 +1086,7 @@ object BTier extends QueryRegistry {
     * subscription pipeline hits. Census by day-of-month of how many
     * +1-month and +3-month rolls clamp; both engines must agree on the
     * clamp rule AND the leap-year cells. */
-  private val b62: Q = query("b62_month_arithmetic_clamp", oracle =
+  private val b62: Q = sqlQuery("b62_month_arithmetic_clamp", oracle =
       ("""WITH d AS (SELECT CAST(o_orderdate AS DATE) AS d FROM orders
          |  WHERE o_orderdate IS NOT NULL),
          |r AS (SELECT day(d) AS dom,
@@ -1234,9 +1099,8 @@ object BTier extends QueryRegistry {
          | CAST(SUM(c1) AS BIGINT) AS n_clamped_1m,
          | CAST(SUM(c3) AS BIGINT) AS n_clamped_3m
          |FROM r GROUP BY dom ORDER BY day_of_month"""
-        .stripMargin.replace("\n", " "))) { (spark, sfDir) =>
-    Tables.registerAll(spark, sfDir)
-    spark.sql(
+        .stripMargin.replace("\n", " ")),
+    sparkSql =
       """WITH d AS (SELECT CAST(o_orderdate AS DATE) AS d FROM orders
         |  WHERE o_orderdate IS NOT NULL),
         |r AS (SELECT day(d) AS dom,
@@ -1249,7 +1113,6 @@ object BTier extends QueryRegistry {
         |  CAST(SUM(c1) AS BIGINT) AS n_clamped_1m,
         |  CAST(SUM(c3) AS BIGINT) AS n_clamped_3m
         |FROM r GROUP BY dom ORDER BY day_of_month""".stripMargin)
-  }
 
   /** b63 — explicit NULL ordering in window sorts: Spark's default is
     * NULLS FIRST ascending, DuckDB's is NULLS LAST — the silent
@@ -1258,7 +1121,7 @@ object BTier extends QueryRegistry {
     * semantics in both engines; NULL keys planted (event_id % 211) so
     * the corner is non-vacuous: the asc_nulls_first block's head rows
     * ARE the null-key rows. */
-  private val b63: Q = query("b63_explicit_null_ordering", oracle =
+  private val b63: Q = sqlQuery("b63_explicit_null_ordering", oracle =
       ("""WITH e AS (SELECT event_type, event_id,
          |  CASE WHEN event_id % 211 = 0 THEN NULL
          |   ELSE CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)
@@ -1278,29 +1141,7 @@ object BTier extends QueryRegistry {
          |UNION ALL
          |SELECT event_type, ordering, CAST(rn AS INT) AS rn, cents FROM b
          |ORDER BY event_type, ordering, rn"""
-        .stripMargin.replace("\n", " "))) { (spark, sfDir) =>
-    Tables.registerAll(spark, sfDir)
-    spark.sql(
-      """WITH e AS (SELECT event_type, event_id,
-        |  CASE WHEN event_id % 211 = 0 THEN NULL
-        |   ELSE CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)
-        |   END AS cents
-        | FROM events WHERE event_type IS NOT NULL),
-        |t AS (SELECT event_type, 'desc_nulls_last' AS ordering, rn, cents
-        | FROM (SELECT event_type, cents, ROW_NUMBER() OVER
-        |   (PARTITION BY event_type
-        |    ORDER BY cents DESC NULLS LAST, event_id) AS rn FROM e)
-        | WHERE rn <= 3),
-        |b AS (SELECT event_type, 'asc_nulls_first' AS ordering, rn, cents
-        | FROM (SELECT event_type, cents, ROW_NUMBER() OVER
-        |   (PARTITION BY event_type
-        |    ORDER BY cents ASC NULLS FIRST, event_id) AS rn FROM e)
-        | WHERE rn <= 3)
-        |SELECT event_type, ordering, CAST(rn AS INT) AS rn, cents FROM t
-        |UNION ALL
-        |SELECT event_type, ordering, CAST(rn AS INT) AS rn, cents FROM b
-        |ORDER BY event_type, ordering, rn""".stripMargin)
-  }
+        .stripMargin.replace("\n", " ")))
 
   private def dsumSql(x: String) = s"CAST(SUM(CAST($x AS DECIMAL(18,2))) AS DOUBLE)"
 }

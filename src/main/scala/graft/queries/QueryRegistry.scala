@@ -2,6 +2,8 @@ package graft.queries
 
 import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.FreshSession
+import graft.sources.Tables
 
 /**
  * One declaration per query: [[query]] registers a builder together with its
@@ -24,6 +26,20 @@ trait QueryRegistry {
     require(!registry.contains(name), s"query name registered twice: $name")
     registry(name) = (builder, () => oracle)
     builder
+  }
+
+  /** A query that is one SQL text over the tables ([[Tables.All]]), run in a
+    * [[FreshSession]] that holds the table views, so the caller's catalog
+    * never changes. The text is the `oracle`'s own unless the Spark dialect
+    * differs, in which case `sparkSql` gives the Spark text. */
+  protected def sqlQuery(name: String, oracle: => String, sparkSql: String = ""): Q = {
+    lazy val text = if (sparkSql.nonEmpty) sparkSql else oracle
+    query(name, oracle) { (spark, sfDir) =>
+      FreshSession(spark) { s =>
+        Tables.registerAll(s, sfDir) // session-mutation: views of the fresh session
+        s.sql(text)
+      }
+    }
   }
 
   lazy val queries: Map[String, Q] =

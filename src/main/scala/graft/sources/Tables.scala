@@ -27,14 +27,14 @@ object Tables {
     * ingest of nanos-timestamped data. */
   private[graft] def ensureNanosAsLong(spark: SparkSession): Unit = {
     if (!spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").contains("true"))
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true") // session-mutation: must hold at scan
     // Map non-UTC-adjusted parquet timestamps to session-zone TimestampType AT
     // THE SCAN (session tz is UTC, so the instant is unchanged) instead of
     // inferring TIMESTAMP_NTZ and casting after. The cast form blocks
     // predicate pushdown on ts — the deciding property at scale, where a
     // time-range filter must prune row groups inside the parquet scan.
     if (!spark.conf.getOption("spark.sql.parquet.inferTimestampNTZ.enabled").contains("false"))
-      spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+      spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false") // session-mutation: must hold at scan
   }
 
   /** Normalize whatever physical form `ts` arrived in to one logical schema:
@@ -60,7 +60,10 @@ object Tables {
     normalizeEventTs(spark.read.parquet(s"$sfDir/events.parquet"))
   }
 
-  /** Register every table as a temp view (multi-table SQL surface). */
+  /** Register every table as a temp view (multi-table SQL surface). A
+    * builder calls this only on a fresh session of its own
+    * ([[graft.queries.QueryRegistry]]'s `sqlQuery`), never on the session it
+    * is given. */
   def registerAll(spark: SparkSession, sfDir: String): Unit =
-    All.foreach(n => apply(spark, sfDir, n).createOrReplaceTempView(n))
+    All.foreach(n => apply(spark, sfDir, n).createOrReplaceTempView(n)) // session-mutation: the caller's choice of session
 }

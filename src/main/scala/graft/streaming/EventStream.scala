@@ -27,9 +27,19 @@ object EventStream {
    * session conf) that is pure commit overhead: 32 store commits × N
    * batches × sides for a few thousand rows. Drain streaming queries with
    * the conf lowered to [[StreamStatePartitions]] and restore the caller's
-   * value after (the drain is synchronous, so nothing else observes it).
-   * The operator SHAPE is unchanged — state is still hash-distributed, a
-   * production deployment sizes the same knob to its executor count.
+   * value after. The operator SHAPE is unchanged — state is still
+   * hash-distributed, a production deployment sizes the same knob to its
+   * executor count.
+   *
+   * Why this flip (and the RocksDB one in [[purchaseMilestones]]) stays on
+   * the caller's session instead of going through
+   * [[org.apache.spark.sql.graft.FreshSession]] like the batch builders:
+   * the first use of a session's `.streams` registers a SparkContext bus
+   * listener that is never removed, so a fresh session per drain would leak
+   * one listener per call (measured on Spark 4.1.2: +1 bus listener per
+   * session whose `.streams` is touched). The caller's session has its
+   * listener already. The drain is synchronous, and the value is restored
+   * before it returns.
    *
    * Fixed at 4: measured at sf0.1 over the full 8-query streaming set,
    * 4 beats 8 (27.9 s vs 29.7 s cold; the gap is per-partition store-commit
@@ -57,8 +67,8 @@ object EventStream {
   private def withStatePartitions[T](spark: SparkSession)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
-    spark.conf.set(key, StreamStatePartitions.toString)
-    try body finally spark.conf.set(key, prev)
+    spark.conf.set(key, StreamStatePartitions.toString) // session-mutation: streams stay on the caller (see above)
+    try body finally spark.conf.set(key, prev) // session-mutation: restores the caller's value
   }
 
   /** Runs `stream` to the end of the replay into a memory sink (under
@@ -329,8 +339,8 @@ object EventStream {
    * milestones emit exactly once because the counter never replays under
    * the ordered drain.
    *
-   * Requires the RocksDB state store provider — set for the drain and
-   * restored after, the same scoped-conf discipline as
+   * Requires the RocksDB state store provider — set on the caller's session
+   * for the drain and restored after, for the reason given at
    * [[withStatePartitions]].
    */
   def purchaseMilestones(spark: SparkSession, sfDir: String,
@@ -347,11 +357,11 @@ object EventStream {
 
     val provKey = "spark.sql.streaming.stateStore.providerClass"
     val prevProv = spark.conf.get(provKey)
-    spark.conf.set(provKey,
+    spark.conf.set(provKey, // session-mutation: streams stay on the caller (see withStatePartitions)
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val drained =
       try drainToMemory(spark, milestones.toDF(), "append", "graft_tws_")
-      finally spark.conf.set(provKey, prevProv)
+      finally spark.conf.set(provKey, prevProv) // session-mutation: restores the caller's value
     drained.orderBy("user_id", "milestone")
   }
 

@@ -110,4 +110,13 @@ class EngineSpec extends AnyFunSuite {
     intercept[SqlValidator.UnsafeSqlException](
       Engine.executeSql(spark, df, "DROP TABLE df"))
   }
+
+  test("executeSql rejects a side-effecting statement the substring validator passes") {
+    // no blocklisted keyword, so SqlValidator passes it; Spark would then
+    // create and cache the view `t` on the caller's session
+    val df = Seq((1, "x")).toDF("a", "b")
+    intercept[plans.ReadOnlyGuard.NotReadOnlyException](
+      Engine.executeSql(spark, df, "CACHE TABLE t AS SELECT * FROM df"))
+    assert(!spark.catalog.tableExists("t"))
+  }
 }
