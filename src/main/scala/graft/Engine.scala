@@ -19,6 +19,16 @@ import scala.jdk.CollectionConverters._
  * A LIMIT-bounded answer runs as ONE Spark job and comes back as a local
  * snapshot of at most `MAX_ROWS_LIMIT` rows, like the reference's
  * `fetchdf()`; an unbounded one stays distributed (see [[collapseDuplicates]]).
+ *
+ * An upload is parsed once, as the reference keeps its pandas frame
+ * (`upload.py:25-26`): [[load]] returns a lazy local checkpoint of the CSV
+ * scan. The first action over it writes the parsed rows into Spark's block
+ * store at MEMORY_AND_DISK (a large upload spills to `spark.local.dir`, not
+ * into the driver heap); every later answer reads those blocks and plans no
+ * file scan. The caller's `df` view pins the session's last upload; the
+ * blocks are freed by the `ContextCleaner` once the frame is unreachable. A
+ * local checkpoint is not recomputed after an executor is lost, which a
+ * `local[k]` engine does not see.
  */
 object Engine {
 
@@ -91,13 +101,20 @@ object Engine {
    * schema inference (`pd.read_csv`) → column profiling (`profile_csv`).
    * Read errors surface as the reference's catch-all 400
    * ("Error reading CSV: …", `upload.py:31-33`).
+   *
+   * Returns the scan's lazy local checkpoint: the first action parses the
+   * file once into the block store (MEMORY_AND_DISK) and later actions read
+   * the blocks, not the file. The blocks live while the frame, or a `df` view
+   * registered from it, is reachable. The profile's head sample reads the
+   * scan: profiling the snapshot would materialize the whole upload here.
    */
   def load(spark: SparkSession, path: String): (DataFrame, Seq[Profiler.ColumnInfo]) = {
     if (!path.endsWith(".csv"))
       throw new UploadException("Only CSV files allowed")
     try {
-      val df = graft.sources.CsvSource.read(spark, path)
-      (df, Profiler.profile(df))
+      val scan = graft.sources.CsvSource.read(spark, path)
+      val cols = Profiler.profile(scan)
+      (scan.localCheckpoint(eager = false), cols)
     } catch {
       case e: Exception => throw new UploadException(s"Error reading CSV: ${e.getMessage}", e)
     }
@@ -106,6 +123,11 @@ object Engine {
   /** Register + execute one validated SELECT over the session table `df`
     * (`query.py:42-45`), then apply the duplicate collapse (`query.py:49-57`). */
   def execute(spark: SparkSession, df: DataFrame, validatedSql: String): DataFrame = {
+    // The view lands in `df`'s session and the SQL resolves in `spark`'s:
+    // on a mismatch a stale `df` of another upload would answer.
+    require(df.sparkSession eq spark,
+      "Engine.execute: df belongs to another SparkSession than the one given; " +
+        "its `df` view would not be the table the SQL reads")
     df.createOrReplaceTempView("df") // session-mutation: the upload's `df` view (query.py:43)
     collapseDuplicates(spark.sql(toSparkSql(validatedSql)))
   }

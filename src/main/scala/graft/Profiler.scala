@@ -46,23 +46,24 @@ object Profiler {
   // Not exhaustive — pandas' guesser covers more exotic shapes — but the
   // recognized set errs the same direction as the pinned reference: a column
   // must actually look like dates to profile as `date`.
+  // Built once: formatters are immutable and thread-safe.
   private val DateOnlyFormats = Seq(
     "yyyy-MM-dd", "yyyy/MM/dd", "MM/dd/yyyy", "M/d/yyyy", "dd-MM-yyyy",
-    "dd.MM.yyyy", "yyyyMMdd", "MMMM d, yyyy", "MMM d, yyyy", "d MMMM yyyy")
+    "dd.MM.yyyy", "yyyyMMdd", "MMMM d, yyyy", "MMM d, yyyy", "d MMMM yyyy").map(fmt)
   private val DateTimeFormats = Seq(
     "yyyy-MM-dd'T'HH:mm:ss", "yyyy-MM-dd HH:mm:ss",
     "yyyy-MM-dd'T'HH:mm:ss.SSSSSS", "yyyy-MM-dd HH:mm:ss.SSSSSS",
-    "yyyy-MM-dd HH:mm", "MM/dd/yyyy HH:mm", "MM/dd/yyyy HH:mm:ss")
+    "yyyy-MM-dd HH:mm", "MM/dd/yyyy HH:mm", "MM/dd/yyyy HH:mm:ss").map(fmt)
 
   private def fmt(p: String) = DateTimeFormatter.ofPattern(p, java.util.Locale.US)
 
   def parsesAsDate(s: String): Boolean = {
     val t = s.trim
     DateOnlyFormats.exists { f =>
-      try { LocalDate.parse(t, fmt(f)); true }
+      try { LocalDate.parse(t, f); true }
       catch { case _: Exception => false }
     } || DateTimeFormats.exists { f =>
-      try { LocalDateTime.parse(t, fmt(f)); true }
+      try { LocalDateTime.parse(t, f); true }
       catch { case _: Exception => false }
     }
   }

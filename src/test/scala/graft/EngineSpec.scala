@@ -119,4 +119,13 @@ class EngineSpec extends AnyFunSuite {
       Engine.executeSql(spark, df, "CACHE TABLE t AS SELECT * FROM df"))
     assert(!spark.catalog.tableExists("t"))
   }
+
+  test("execute refuses a df of another session instead of answering over a stale view") {
+    // an earlier upload leaves its `df` view on `spark`
+    Engine.executeSql(spark, Seq(("stale", 1)).toDF("s", "n"), "SELECT s FROM df").result.collect()
+    val other = spark.newSession()
+    val fresh = other.createDataFrame(Seq(("fresh", 2))).toDF("s", "n")
+    val e = intercept[IllegalArgumentException](Engine.executeSql(spark, fresh, "SELECT s FROM df"))
+    assert(e.getMessage.contains("another SparkSession"))
+  }
 }
