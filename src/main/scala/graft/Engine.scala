@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.FreshSession
 import org.apache.spark.sql.types._
 import java.time.LocalDateTime
 import scala.collection.immutable.ArraySeq
@@ -12,9 +13,10 @@ import scala.jdk.CollectionConverters._
  * Query executor — Spark replacement for the reference's execution path
  * (`/root/reference/app/routes/query.py:42-57`): where the reference
  * registers a pandas frame into an embedded DuckDB connection and fetches the
- * whole result back, we register the DataFrame as a temp view named `df`
- * (`query.py:43`) and let Catalyst + whole-stage codegen run the SQL
- * distributed. The NL question path is generate → validate → execute →
+ * whole result back, each answer registers the DataFrame as a temp view
+ * named `df` (`query.py:43`) in a new session of its own, which reads the
+ * generator's double-quoted identifiers as DuckDB does, and lets Catalyst +
+ * whole-stage codegen run the SQL distributed. The NL question path is generate → validate → execute →
  * duplicate-collapse, exactly the reference pipeline (`query.py:33-57`).
  * A LIMIT-bounded answer runs as ONE Spark job and comes back as a local
  * snapshot of at most `MAX_ROWS_LIMIT` rows, like the reference's
@@ -25,8 +27,8 @@ import scala.jdk.CollectionConverters._
  * scan. The first action over it writes the parsed rows into Spark's block
  * store at MEMORY_AND_DISK (a large upload spills to `spark.local.dir`, not
  * into the driver heap); every later answer reads those blocks and plans no
- * file scan. The caller's `df` view pins the session's last upload; the
- * blocks are freed by the `ContextCleaner` once the frame is unreachable. A
+ * file scan. The blocks are freed by the `ContextCleaner` once the frame and
+ * every answer built on it are unreachable. A
  * local checkpoint is not recomputed after an executor is lost, which a
  * `local[k]` engine does not see.
  */
@@ -36,58 +38,6 @@ object Engine {
     * a DataFrame instead of `rows: List[Dict]` — a local relation when the
     * result is LIMIT-bounded, a distributed plan otherwise. */
   case class QueryResult(sql: String, result: DataFrame)
-
-  /**
-   * The generator emits double-quoted identifiers (`sql_generator.py:8-10`,
-   * DuckDB dialect); Spark SQL wants backticks unless
-   * `spark.sql.ansi.doubleQuotedIdentifiers` is on. The rewrite is
-   * quote-aware: double-quoted spans inside single-quoted string literals
-   * (reachable via the arbitrary-SQL path) are left untouched, including
-   * doubled-'' escapes.
-   */
-  def toSparkSql(sql: String): String = {
-    val out = new StringBuilder(sql.length)
-    var i = 0
-    while (i < sql.length) {
-      sql.charAt(i) match {
-        case '\'' => // copy the single-quoted literal verbatim ('' = escape)
-          out.append('\'')
-          i += 1
-          var done = false
-          while (i < sql.length && !done) {
-            val c = sql.charAt(i)
-            out.append(c)
-            i += 1
-            if (c == '\'') {
-              if (i < sql.length && sql.charAt(i) == '\'') { out.append('\''); i += 1 }
-              else done = true
-            }
-          }
-        case '"' => // identifier span → backticks ("" = escaped quote)
-          val start = i
-          i += 1
-          val ident = new StringBuilder
-          var closed = false
-          while (i < sql.length && !closed) {
-            val c = sql.charAt(i)
-            if (c == '"') {
-              // Doubled "" inside the span is an escaped literal " in the
-              // identifier (SQL standard); emit it as-is in the backtick span
-              // and double any backticks (Spark's own escape) so `a"b` and
-              // `a\`b` both round-trip.
-              if (i + 1 < sql.length && sql.charAt(i + 1) == '"') { ident.append('"'); i += 2 }
-              else { closed = true; i += 1 }
-            } else { ident.append(c); i += 1 }
-          }
-          if (!closed) out.append(sql.substring(start)) // unterminated: verbatim
-          else out.append('`').append(ident.toString.replace("`", "``")).append('`')
-        case c =>
-          out.append(c)
-          i += 1
-      }
-    }
-    out.toString
-  }
 
   /** Raised for the reference's HTTP-400 upload rejections
     * (`/root/reference/app/routes/upload.py:20-22`). */
@@ -104,8 +54,8 @@ object Engine {
    *
    * Returns the scan's lazy local checkpoint: the first action parses the
    * file once into the block store (MEMORY_AND_DISK) and later actions read
-   * the blocks, not the file. The blocks live while the frame, or a `df` view
-   * registered from it, is reachable. The profile's head sample reads the
+   * the blocks, not the file. The blocks live while the frame, or an answer
+   * built on it, is reachable. The profile's head sample reads the
    * scan: profiling the snapshot would materialize the whole upload here.
    */
   def load(spark: SparkSession, path: String): (DataFrame, Seq[Profiler.ColumnInfo]) = {
@@ -120,17 +70,29 @@ object Engine {
     }
   }
 
-  /** Register + execute one validated SELECT over the session table `df`
-    * (`query.py:42-45`), then apply the duplicate collapse (`query.py:49-57`). */
-  def execute(spark: SparkSession, df: DataFrame, validatedSql: String): DataFrame = {
-    // The view lands in `df`'s session and the SQL resolves in `spark`'s:
-    // on a mismatch a stale `df` of another upload would answer.
-    require(df.sparkSession eq spark,
-      "Engine.execute: df belongs to another SparkSession than the one given; " +
-        "its `df` view would not be the table the SQL reads")
-    df.createOrReplaceTempView("df") // session-mutation: the upload's `df` view (query.py:43)
-    collapseDuplicates(spark.sql(toSparkSql(validatedSql)))
-  }
+  /** The answer session's dialect, DuckDB's quoting (`sql_generator.py:8-10`):
+    * `"x"` is an identifier. Spark honours `doubleQuotedIdentifiers` only
+    * under ANSI mode, so a caller with ANSI off still reads `"city"` as a
+    * column, not as a string literal. */
+  private val DuckDbQuoting = Seq(
+    "spark.sql.ansi.enabled" -> "true",
+    "spark.sql.ansi.doubleQuotedIdentifiers" -> "true")
+
+  /** Execute one validated SELECT over the table `df` (`query.py:42-45`),
+    * then apply the duplicate collapse (`query.py:49-57`). */
+  def execute(spark: SparkSession, df: DataFrame, validatedSql: String): DataFrame =
+    collapseDuplicates(resolve(spark, df, validatedSql))
+
+  /** The answer before the collapse: `sql` is checked read-only
+    * ([[graft.plans.ReadOnlyGuard]]) and analyzed in a new session of
+    * `spark` whose one view is `df`, then bound back to `spark`. The view
+    * never reaches the caller's catalog, so answers over two uploads on one
+    * session cannot read each other's table. */
+  private[graft] def resolve(spark: SparkSession, df: DataFrame, sql: String): DataFrame =
+    FreshSession.withView(spark, "df", df, DuckDbQuoting: _*) { s =>
+      graft.plans.ReadOnlyGuard.assertReadOnly(s, sql)
+      s.sql(sql)
+    }
 
   /**
    * Duplicate-row collapse, port of `query.py:49-57`: if the result contains
@@ -253,14 +215,13 @@ object Engine {
 
   /** The AI-path contract: any externally produced SELECT, validated then
     * run. The validator keeps the reference's substring semantics for parity;
-    * [[graft.plans.ReadOnlyGuard]] then rejects, at the parsed plan, any
-    * side-effecting statement the blocklist misses (`CACHE TABLE … AS
-    * SELECT`, `SET`, `REFRESH TABLE`), so user SQL cannot change the session
-    * either. `spark.graft.maxRows` adds the optimizer-rule row cap
+    * [[resolve]]'s [[graft.plans.ReadOnlyGuard]] then rejects, at the parsed
+    * plan, any side-effecting statement the blocklist misses (`CACHE TABLE …
+    * AS SELECT`, `SET`, `REFRESH TABLE`), so user SQL cannot change the
+    * state its session shares either. `spark.graft.maxRows` adds the optimizer-rule row cap
     * ([[graft.plans.EnforceMaxRows]]). */
   def executeSql(spark: SparkSession, df: DataFrame, sql: String): QueryResult = {
     val validated = SqlValidator.validate(sql, df.columns.toIndexedSeq)
-    graft.plans.ReadOnlyGuard.assertReadOnly(spark, toSparkSql(validated))
     QueryResult(validated, execute(spark, df, validated))
   }
 }

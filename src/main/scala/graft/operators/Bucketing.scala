@@ -42,7 +42,8 @@ object Bucketing {
       // Sort back into every downstream merge join)
       df.repartition(buckets, df(key))
         .write.bucketBy(buckets, key).sortBy(key)
-        .option("path", path).mode("overwrite").saveAsTable(table)
+        .option("path", path).mode("overwrite")
+        .saveAsTable(table) // session-mutation: Spark reads a bucket spec only from a catalog table
     }
     spark.table(table)
   }

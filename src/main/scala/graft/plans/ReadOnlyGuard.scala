@@ -2,6 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.{Command, InsertIntoStatement, LogicalPlan, ParsedStatement}
+import org.apache.spark.sql.internal.SQLConf
 
 /**
  * Plan-level hardening of the SQL safety gate (SURVEY.md §4's "optional
@@ -18,9 +19,14 @@ object ReadOnlyGuard {
 
   final class NotReadOnlyException(msg: String) extends IllegalArgumentException(msg)
 
-  /** Parse `sql` and throw unless it is a side-effect-free query. */
+  /** Parse `sql` and throw unless it is a side-effect-free query. The parse
+    * runs under `spark`'s conf, the dialect the statement runs in (the parser
+    * otherwise reads the thread's active session, whose quoting may reject
+    * `AS "x"`). */
   def assertReadOnly(spark: SparkSession, sql: String): Unit = {
-    val plan = spark.sessionState.sqlParser.parsePlan(sql)
+    val plan = SQLConf.withExistingConf(spark.sessionState.conf) {
+      spark.sessionState.sqlParser.parsePlan(sql)
+    }
     val offender: Option[LogicalPlan] = plan.collectFirst {
       case c: Command => c
       case i: InsertIntoStatement => i

@@ -32,6 +32,15 @@ object FreshSession {
     bind(caller, body(fresh))
   }
 
+  /** [[apply]] with `df` registered as the new session's temp view `view`:
+    * a view that only the body's SQL can see. */
+  def withView(caller: SparkSession, view: String, df: DataFrame, confs: (String, String)*)(
+      body: SparkSession => DataFrame): DataFrame =
+    apply(caller, confs: _*) { s =>
+      bind(s, df).createOrReplaceTempView(view) // session-mutation: the fresh session's own view
+      body(s)
+    }
+
   /** `df`'s analyzed plan as a frame of `session`. */
   def bind(session: SparkSession, df: DataFrame): DataFrame =
     classic.Dataset.ofRows(session.asInstanceOf[classic.SparkSession],

@@ -118,14 +118,14 @@ class CollapsePathSpec extends AnyFunSuite {
   test("path: an alias-only 'limit' and a LIMIT above the cap stay distributed") {
     val aliased = Engine.executeSql(spark, dupes, "SELECT status AS status_limit, kind FROM df")
     assert(!aliased.sql.toUpperCase.endsWith(s"LIMIT ${SqlValidator.MaxRowsLimit}"))
-    assert(!Engine.boundedByLimit(spark.sql(Engine.toSparkSql(aliased.sql))))
+    assert(!Engine.boundedByLimit(Engine.resolve(spark, dupes, aliased.sql)))
     assert(!isLocal(aliased.result))
     assert(aliased.result.columns.toSeq == Seq("status_limit", "kind", "count"))
     assert(triples(aliased.result) == collapsedDupes)
 
     val above = Engine.executeSql(spark, dupes,
       s"SELECT status, kind FROM df LIMIT ${SqlValidator.MaxRowsLimit + 1}")
-    assert(!Engine.boundedByLimit(spark.sql(Engine.toSparkSql(above.sql))))
+    assert(!Engine.boundedByLimit(Engine.resolve(spark, dupes, above.sql)))
     assert(!isLocal(above.result))
     assert(triples(above.result) == collapsedDupes)
     // no duplicates: the distributed path passes the plan through unchanged

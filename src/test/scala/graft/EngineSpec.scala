@@ -1,7 +1,10 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
 
 class EngineSpec extends AnyFunSuite {
   private val spark = SparkTestSession.spark
@@ -43,23 +46,44 @@ class EngineSpec extends AnyFunSuite {
     assert(rows == Set(("a", 1L), ("b", 1L)))
   }
 
-  test("toSparkSql: double quotes inside single-quoted literals are preserved") {
-    assert(Engine.toSparkSql("""SELECT "a b" FROM df WHERE note = 'say "hi"'""") ==
-      """SELECT `a b` FROM df WHERE note = 'say "hi"'""")
-    // doubled-quote escape inside a literal
-    assert(Engine.toSparkSql("""SELECT "c" FROM df WHERE x = 'it''s "q"'""") ==
-      """SELECT `c` FROM df WHERE x = 'it''s "q"'""")
+  /** Columns a DuckDB-quoted identifier must reach: a space, a `"` and a
+    * backtick in the name, and values holding double quotes. */
+  private def quoted = Seq(("x", "say \"hi\"", 1, 2), ("y", "it's \"q\"", 3, 4))
+    .toDF("a b", "note", "a\"b", "a`b")
+
+  private def column(sql: String): (Seq[String], Seq[Any]) = {
+    val res = Engine.executeSql(spark, quoted, sql).result
+    (res.columns.toSeq, res.collect().map(_.get(0)).toSeq)
   }
 
-  test("toSparkSql: doubled-quote escapes inside identifiers") {
-    // DuckDB "a""b" is identifier a"b → Spark `a"b` (not a broken `a``b`)
-    assert(Engine.toSparkSql("""SELECT "a""b" FROM df""") ==
-      "SELECT `a\"b` FROM df")
-    // backticks inside a quoted identifier must be doubled for Spark
-    assert(Engine.toSparkSql("SELECT \"a`b\" FROM df") ==
-      "SELECT `a``b` FROM df")
-    // unterminated span copied verbatim (no silent mangling)
-    assert(Engine.toSparkSql("""SELECT "oops""") == """SELECT "oops""")
+  test("quoting: double quotes inside single-quoted literals stay literal text") {
+    assert(column("""SELECT "a b" FROM df WHERE note = 'say "hi"'""") == (Seq("a b"), Seq("x")))
+    // doubled-quote escape inside a literal
+    assert(column("""SELECT "a b" FROM df WHERE note = 'it''s "q"'""") == (Seq("a b"), Seq("y")))
+  }
+
+  test("quoting: doubled-quote and backtick escapes inside identifiers") {
+    // DuckDB "a""b" is the identifier a"b
+    assert(column("""SELECT "a""b" FROM df ORDER BY "a""b"""") == (Seq("a\"b"), Seq(1, 3)))
+    // a backtick inside a double-quoted identifier is an ordinary character
+    assert(column("SELECT \"a`b\" FROM df ORDER BY \"a`b\"") == (Seq("a`b"), Seq(2, 4)))
+    // an unterminated span is a parse error, not a silently mangled query
+    intercept[org.apache.spark.sql.AnalysisException](column("""SELECT "oops"""))
+  }
+
+  test("quoting: quoted aliases, tables and qualified columns pass the read-only check") {
+    // a parse under the caller's quoting would reject each of these
+    assert(column("""SELECT t."a b" AS "label" FROM "df" t WHERE t.note = 'say "hi"'""") ==
+      (Seq("label"), Seq("x")))
+  }
+
+  test("quoting: a caller with ANSI off still reads \"city\" as a column") {
+    val caller = spark.newSession()
+    caller.conf.set("spark.sql.ansi.enabled", "false")
+    val df = caller.createDataFrame(Seq(("Mumbai", 1), ("Delhi", 2))).toDF("city", "n")
+    val res = Engine.executeSql(caller, df, """SELECT "city" FROM df ORDER BY "n"""").result
+    assert(res.collect().map(_.getString(0)).toSeq == Seq("Mumbai", "Delhi"))
+    assert(caller.conf.get("spark.sql.ansi.enabled") == "false")
   }
 
   test("load: composed ingest with extension gate (upload.py parity)") {
@@ -120,12 +144,23 @@ class EngineSpec extends AnyFunSuite {
     assert(!spark.catalog.tableExists("t"))
   }
 
-  test("execute refuses a df of another session instead of answering over a stale view") {
-    // an earlier upload leaves its `df` view on `spark`
-    Engine.executeSql(spark, Seq(("stale", 1)).toDF("s", "n"), "SELECT s FROM df").result.collect()
-    val other = spark.newSession()
-    val fresh = other.createDataFrame(Seq(("fresh", 2))).toDF("s", "n")
-    val e = intercept[IllegalArgumentException](Engine.executeSql(spark, fresh, "SELECT s FROM df"))
-    assert(e.getMessage.contains("another SparkSession"))
+  test("two uploads answered from 2 threads on one session each get their own answers") {
+    val uploads = Seq(
+      Seq(("a", 1), ("b", 2)).toDF("s", "n"),
+      Seq(("c", 3), ("d", 4), ("e", 5)).toDF("s", "n"))
+    def rows(df: DataFrame): Seq[Row] =
+      Engine.executeSql(spark, df, "SELECT s, n FROM df ORDER BY n").result.collect().toSeq
+    val serial = uploads.map(rows)
+    val rounds = 40
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    try {
+      val runs = uploads.map(df => Future((1 to rounds).map(_ => rows(df))))
+      runs.zip(serial).zipWithIndex.foreach { case ((run, want), i) =>
+        val wrong = Await.result(run, 5.minutes).count(_ != want)
+        assert(wrong == 0, s"$wrong of $rounds answers over upload $i read another table")
+      }
+    } finally pool.shutdown()
+    assert(!spark.catalog.tableExists("df")) // the view lived only in each answer's session
   }
 }

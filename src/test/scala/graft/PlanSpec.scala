@@ -45,11 +45,12 @@ class PlanSpec extends AnyFunSuite {
   test("a07/x05: ORDER BY + LIMIT plans as top-k (TakeOrderedAndProject), no global sort") {
     // a07's answer is LIMIT-bounded: Engine runs its plan once and returns a
     // local snapshot, so the top-k shape is asserted on the SQL's own plan
-    val a07 = Engine.executeSql(spark, sources.Tables(spark, sf, "orders"),
+    val orders = sources.Tables(spark, sf, "orders")
+    val a07 = Engine.executeSql(spark, orders,
       "SELECT o_orderkey, o_totalprice FROM df ORDER BY o_totalprice DESC, o_orderkey")
     assert(a07.result.queryExecution.executedPlan
       .isInstanceOf[org.apache.spark.sql.execution.LocalTableScanExec])
-    assert(spark.sql(Engine.toSparkSql(a07.sql)).queryExecution.executedPlan.toString
+    assert(Engine.resolve(spark, orders, a07.sql).queryExecution.executedPlan.toString
       .contains("TakeOrderedAndProject"))
     assert(plan("x05_cosine_topk_brute").contains("TakeOrderedAndProject"))
   }

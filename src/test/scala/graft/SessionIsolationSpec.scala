@@ -6,9 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
  * A builder never changes the session it is given. Each query that needs
  * views or its own conf — the SQL queries (`sqlQuery`: the table views),
  * x46 (five skew confs), x113 (dynamic partition overwrite) and x66 (the
- * AQE-off `Graph.partitionedCheckpoint`) — is built and counted on a new
- * session of its own, whose temp views and conf are read before and after.
- * Runs at sf0.001.
+ * AQE-off `Graph.partitionedCheckpoint`), and the a-tier queries that
+ * answer through `Engine` (each answer's `df` view) — is built and counted
+ * on a new session of its own, whose temp views and conf are read before and
+ * after. Runs at sf0.001.
  */
 class SessionIsolationSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
@@ -25,7 +26,9 @@ class SessionIsolationSpec extends AnyFunSuite {
     "x83_hll_sketch_merge", "x95_bitmap_distinct_merge",
     "x362_catalog_hierarchy_rollup",
     "x46_aqe_skew_join", "x113_dynamic_partition_overwrite",
-    "x66_pagerank_integer")
+    "x66_pagerank_integer",
+    "a03_projection", "a04_rule_groupby_count", "a05_rule_city_lastmonth",
+    "a06_rule_lastmonth_filter", "a07_limit_injection_topk", "a08_dedup_collapse")
 
   inScope.foreach { name =>
     test(s"$name leaves the caller's temp views and conf unchanged") {

@@ -155,9 +155,7 @@ class UploadSnapshotSpec extends AnyFunSuite {
       val session = spark.newSession()
       val (df, cols) = Engine.load(session, f.getAbsolutePath)
       ask(df, cols, shapes.head, session).result.collect()
-      val added = sc.getPersistentRDDs.keySet.diff(before).toSet
-      session.catalog.dropTempView("df")
-      added
+      sc.getPersistentRDDs.keySet.diff(before).toSet
     }
     val added = useAndDrop()
     assert(added.nonEmpty, "the first answer should have persisted the snapshot")
